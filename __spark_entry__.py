@@ -30,41 +30,12 @@ def _configure(spark: SparkSession) -> None:
             pass
 
 
-# The driver's CORRECTNESS gate hash-checks the FIRST 50 keys of
-# queries() in insertion order. Which 50 is decided by the
-# machine-readable rotation schedule in
-# golang_db_query_engine_elasticsearch_indexer_spark/rotation.py
-# (VERDICT r05 asks #1/#6): net-new and changed-kernel entries first,
-# then the never-driver-checked backlog by divergence risk, then
-# re-rotation of the oldest driver evidence. The backlog cleared on
-# schedule (r06: 49 first-time + 1 re-check; r07: the remaining 50;
-# r08: the close-out — all 50/50 green, cumulative coverage 264/264).
-# From r09 the table is in steady-state re-rotation: net-new
-# registrations lead (r09: 20 entries; r10: 83 net-new across
-# thirty-four batches — bucket_selector through ES|QL, the scored
-# bool context, and function_score-over-bool; the window holds 50,
-# so the 33 post-batch-19 registrations carried the r11 label), then
-# changed-kernel re-checks, then the oldest evidence first. The r11
-# roll front-scheduled the 15 net-new r11 registrations, the 3
-# round-boundary changed-kernel re-checks, and the ENTIRE remaining
-# never-checked backlog — which emptied that round. The r12 roll
-# (backlog empty) front-schedules the 18 changed-kernel re-checks
-# (the 15 null-ordering-touched kernels the r11 docstring carried +
-# the termvectors pair + the rewritten agg_approx_sketches), the 9
-# net-new r12 registrations (multi-target alias + comma/wildcard
-# multi-index search, deterministic SAMPLE / CHANGE_POINT, FORK, the
-# TOP/VALUES/WEIGHTED_AVG tier, the trig/log/hash scalar tier,
-# post_filter, the _source object form), then 23 oldest-evidence
-# re-rotations draining the r04/r05 tier (VERDICT r11 ask #1).
-# Everything out of window keeps regression coverage via the in-repo
-# sf0.01 differential gate (tests/test_oracle_queries.py) and the
-# recorded sf0.1 spot differentials (SCALE.md).
-_PRIORITY: tuple[str, ...] = _rotation.CURRENT_WINDOW
-
-
+# The driver hash-checks the first 50 keys of queries() against DuckDB,
+# ordered by rotation.window.
 def _prioritized(d: dict) -> dict:
-    """Reorder dict: _PRIORITY names first (in that order), rest unchanged."""
-    out = {k: d[k] for k in _PRIORITY if k in d}
+    """Reorder dict: the rotation window first, the rest unchanged."""
+    first = _rotation.window(d, _rotation.evidence(), _rotation.CHANGED)
+    out = {k: d[k] for k in first}
     out.update((k, v) for k, v in d.items() if k not in out)
     return out
 

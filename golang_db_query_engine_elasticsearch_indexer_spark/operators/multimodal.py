@@ -1006,10 +1006,6 @@ ORDER BY doc_a, doc_b
 # the encoder is NOT trusted by symmetry alone — a hand-crafted
 # known-byte vector and corruption tests pin the decoder independently
 # (tests/test_operators.py).
-#
-# Registered at the r08 freeze exit (rotation.py): the never-checked
-# backlog cleared in r07, so this entry entered registry() and the
-# roller front-scheduled it as net-new in the r08 window.
 
 PNG_SCHEMA = (
     "doc_id long, width int, height int, channels int, "
@@ -1280,9 +1276,6 @@ ORDER BY doc_id
 # (tests/test_operators.py), and the width schedule of the bit packer
 # is a simulation of the DECODER's table growth, not folklore
 # off-by-one rules.
-#
-# Registered at the r08 freeze exit alongside multimodal_decode_png
-# (rotation.py): net-new, front-scheduled in the r08 window.
 
 GIF_SCHEMA = (
     "doc_id long, width int, height int, n_colors int, "
@@ -1693,8 +1686,7 @@ ORDER BY doc_id
 # sums. Frames are reported raw (no disposal-method compositing — a
 # renderer's concern, not an analytics engine's). Fixture frames come
 # from per-(doc, frame) md5 chains, so the DuckDB oracle replays the
-# decoded stats without parsing binary; registered at the r08 freeze
-# exit with the other staged entries (rotation.py).
+# decoded stats without parsing binary.
 
 GIF_FRAMES_SCHEMA = (
     "doc_id long, frame_id int, n_frames int, r_sum long, g_sum long, b_sum long"
@@ -3826,8 +3818,6 @@ def registry() -> dict[str, dict]:
             "fn": decode_audio,
             "oracle": _decode_audio_oracle(),
         },
-        # r08 freeze-exit registrations (rotation.py): staged in r07
-        # with oracles ready, entered the driver window as net-new
         "multimodal_decode_png": {
             "fn": decode_png,
             "oracle": _decode_png_oracle(),

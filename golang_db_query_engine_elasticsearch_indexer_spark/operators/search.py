@@ -764,9 +764,8 @@ s{t} AS MATERIALIZED (SELECT probe_id, vid FROM s{t - 1}
 # documents parquet, so a regenerated corpus can never be served by a
 # stale index.
 #
-# search_bm25_from_artifact registered at the r08 freeze exit
-# (rotation.py): its oracle is BM25_ORACLE verbatim (the artifact path
-# is hash-identical to the self-contained entry), so the driver's
+# search_bm25_from_artifact's oracle is BM25_ORACLE verbatim (the
+# artifact path is hash-identical to the self-contained entry), so the
 # hash-compare covers build+save+load+serve end-to-end.
 
 

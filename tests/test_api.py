@@ -315,45 +315,29 @@ def test_exactly_one_executable_form_per_query_name():
 
 
 def test_rotation_schedule_invariants():
-    """The driver-evidence rotation table (rotation.py) must stay
-    coherent: it covers every queries() name, the current window is
-    exactly the driver's 50 slots and leads queries() in order, every
-    windowed entry has a DuckDB oracle except the two
-    rows-only-by-necessity entries, and every never-driver-checked
-    entry is scheduled in the CURRENT window (net-new front-schedules
-    the round it registers) — the backlog can shrink but never
-    silently grow. Round-agnostic: no assertion here names a round
-    label, so the roller's rewrite can't re-redden this test."""
+    """The driver's window (rotation.window) leads queries() in order:
+    50 distinct registered names, and every never-checked entry holds a
+    slot unless the window is already full of due or never-checked
+    entries (the backlog can shrink but never silently grow)."""
     import __spark_entry__ as entrymod
     from golang_db_query_engine_elasticsearch_indexer_spark.rotation import (
-        CURRENT_WINDOW,
-        ROTATION,
+        CHANGED,
+        evidence,
+        window,
     )
 
     qs = entrymod.queries()
-    os_ = entrymod.oracle_sql()
-    assert set(ROTATION) == set(qs)
-    assert len(CURRENT_WINDOW) == 50
-    assert list(qs)[:50] == list(CURRENT_WINDOW)
-    # every entry carries a DuckDB oracle — the rows-only tier is
-    # EMPTY since r13 (text_compression_ratio joined the hash gate
-    # via the in-plan zlib-bound envelope; rotation.py docstring)
-    rows_only = set(qs) - set(os_)
-    assert rows_only == set()
-    assert all(name in os_ for name in CURRENT_WINDOW)
-    for name, (last_round, _risk, window) in ROTATION.items():
-        if last_round is None:
-            # never-checked entries hold a current-window slot — or,
-            # when a round registers more than 50 net-new entries, the
-            # overflow carries a FUTURE label (front-scheduled next
-            # round; the policy's 2-round unchecked bound still holds)
-            assert window is not None, (
-                f"{name} has no driver evidence and no scheduled window"
-            )
-            if name not in CURRENT_WINDOW:
-                assert window > min(
-                    w for _, _, w in ROTATION.values() if w
-                ), f"{name} deferred without a future label"
+    ev = evidence()
+    w = window(qs, ev, CHANGED)
+    assert len(set(w)) == 50
+    assert set(w) <= set(qs)
+    assert list(qs)[:50] == w
+    never = {n for n in qs if n not in ev.green and n not in ev.failed}
+    if not never <= set(w):
+        assert all(
+            n in never or n in ev.failed or ev.green[n] < CHANGED.get(n, 0)
+            for n in w
+        )
 
 
 # --- the ES API routes (r09): the engine serves the DSL it compiles ----------

@@ -107,24 +107,15 @@ def test_approx_sketches_within_tolerance(spark, oracle_tables, duck_oracle):
 
 
 def test_priority_window_contract():
-    """Guards for the driver-window rotation (the silent-failure modes
-    that bit round 3): every _PRIORITY name must exist in the registry
-    (a typo would silently drop the entry from the window), the window
-    must be exactly 50 deep, and every window slot must carry a full
-    hash oracle — EXCEPT the rows-only-by-necessity entry
-    (rotation.py policy: r08 deliberately schedules them so the driver
-    records their rows-only pass; their expected row shape is
-    documented in the rotation docstring)."""
-    names = set(ALL)
-    missing = [n for n in entrymod._PRIORITY if n not in names]
-    assert not missing, f"_PRIORITY names not in registry: {missing}"
-    assert len(entrymod._PRIORITY) == 50
+    """The driver's window leads oracle_sql() in the same order as
+    queries(), is exactly 50 registered names deep, and every slot
+    carries a full hash oracle (the rows-only tier is empty since r13,
+    when text_compression_ratio joined the hash gate)."""
     window = list(ALL)[:50]
-    # r13: the last rows-only entry (text_compression_ratio) joined
-    # the hash gate via the in-plan zlib-bound envelope — every
-    # registry entry now carries a full oracle.
-    rows_only_ok: set[str] = set()
-    assert set(n for n in window if n not in ORACLES) <= rows_only_ok
+    assert len(set(window)) == 50
+    assert list(ORACLES)[:50] == window
+    assert set(n for n in window if n not in ORACLES) == set()
+    assert ROWS_ONLY == []
 
 
 def test_dedup_kernels_have_no_cross_join(spark, oracle_tables):
