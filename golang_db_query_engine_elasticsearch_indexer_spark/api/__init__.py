@@ -203,8 +203,9 @@ def create_app(
             # Engine improvement over the reference (which cannot see
             # the RDBMS plan): return the optimized physical plan
             # instead of executing. Same validation gates apply.
-            spark = _spark()
-            _registry().attach(spark, params.get("dbDriver", ""), params.get("dbName", ""))
+            spark = gateway.attach(
+                _spark(), _registry(), params.get("dbDriver", ""), params.get("dbName", "")
+            )
             df = gateway.query_df(spark, params.get("query", ""))
             plan = df._jdf.queryExecution().explainString(
                 spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
@@ -246,15 +247,13 @@ def create_app(
         db_name = form.get("dbName", "")
         sql = form.get("query", "")
         index_name = form.get("indexName", "")
-        spark = _spark()
-        reg = _registry()
         if not index_name:
             from golang_db_query_engine_elasticsearch_indexer_spark.errors import (
                 ParamsNullError,
             )
 
             raise ParamsNullError()
-        reg.attach(spark, db_driver, db_name)
+        spark = gateway.attach(_spark(), _registry(), db_driver, db_name)
         stats = indexer_mod.save(spark, sql, index_name, _sink())
         _log.info(stats.log_line())
         return (
@@ -279,14 +278,18 @@ def create_app(
     # schema + count + took) — the same documented improvement /query/
     # makes over the reference's bare JSON array, rather than a
     # half-imitation of the ES hits envelope. Optional dbDriver/dbName
-    # query args attach registry sources, as on /query/.
+    # query args run the request on a child session bound to that
+    # registry source, as on /query/.
 
-    def _attach_if_named():
+    def _session():
+        """The session a request runs on: a child bound to the source
+        when the request names one, else the app session."""
         params = request.args
         if params.get("dbDriver") or params.get("dbName"):
-            _registry().attach(
-                _spark(), params.get("dbDriver", ""), params.get("dbName", "")
+            return gateway.attach(
+                _spark(), _registry(), params.get("dbDriver", ""), params.get("dbName", "")
             )
+        return _spark()
 
     def _es_body() -> dict:
         """Parse the request body as the ES JSON search body. Absent or
@@ -309,7 +312,7 @@ def create_app(
     def es_search_route(index: str):
         import time as _time  # noqa: PLC0415
 
-        _attach_if_named()
+        spark = _session()
         body = _es_body()
         if request.args.get("scroll"):
             # scroll open: first page + a STATELESS cursor (the
@@ -317,7 +320,7 @@ def create_app(
             # scroll_id encodes the position, nothing server-side
             # expires)
             return jsonify(gateway.es_scroll(
-                _spark(), index, body,
+                spark, index, body,
                 id_field=request.args.get("id_field"),
                 max_rows=max_rows,
             )), 200
@@ -327,7 +330,6 @@ def create_app(
             # plan (per-operator timings live in the Spark UI), so
             # profile returns the same section the ?plan=true
             # extension serves, under the standard ES key
-            spark = _spark()
             df = gateway.es_search_df(
                 spark, index, {k: v for k, v in body.items()
                                if k != "profile"}
@@ -341,7 +343,6 @@ def create_app(
             # engine extension, mirroring /query/?explain: return the
             # optimized physical plan of the COMPILED body instead of
             # executing — the observability the reference never had
-            spark = _spark()
             df = gateway.es_search_df(spark, index, body)
             plan = df._jdf.queryExecution().explainString(
                 spark._jvm.org.apache.spark.sql.execution.ExplainMode
@@ -349,43 +350,39 @@ def create_app(
             )
             return jsonify({"plan": plan}), 200
         t0 = _time.time()
-        res = gateway.es_search(_spark(), index, body, max_rows=max_rows)
+        res = gateway.es_search(spark, index, body, max_rows=max_rows)
         payload = json.loads(res.to_json())
         payload["took"] = int((_time.time() - t0) * 1000)
         return jsonify(payload), 200
 
     @app.route("/<index>/_count", methods=["GET", "POST"])
     def es_count_route(index: str):
-        _attach_if_named()
+        spark = _session()
         body = _es_body()
-        return jsonify({"count": gateway.es_count(_spark(), index, body)}), 200
+        return jsonify({"count": gateway.es_count(spark, index, body)}), 200
 
     @app.get("/<index>/_stats")
     def es_index_stats_route(index: str):
-        _attach_if_named()
-        return jsonify(gateway.es_index_stats(_spark(), index)), 200
+        return jsonify(gateway.es_index_stats(_session(), index)), 200
 
     @app.get("/<index>/_settings")
     def es_index_settings_route(index: str):
-        _attach_if_named()
-        return jsonify(gateway.es_index_settings(_spark(), index)), 200
+        return jsonify(gateway.es_index_settings(_session(), index)), 200
 
     @app.get("/<index>/_mapping")
     def es_mapping_route(index: str):
-        _attach_if_named()
-        return jsonify(gateway.es_mapping(_spark(), index)), 200
+        return jsonify(gateway.es_mapping(_session(), index)), 200
 
     @app.route("/<index>", methods=["HEAD"])
     def es_index_exists_route(index: str):
-        _attach_if_named()
+        spark = _session()
         # ES HEAD /{index}: bare 200/404, no body
-        return ("", 200) if gateway.es_index_exists(_spark(), index) \
+        return ("", 200) if gateway.es_index_exists(spark, index) \
             else ("", 404)
 
     @app.get("/<index>/_doc/<doc_id>")
     def es_get_route(index: str, doc_id: str):
-        _attach_if_named()
-        out = gateway.es_get(_spark(), index, doc_id,
+        out = gateway.es_get(_session(), index, doc_id,
                              id_field=request.args.get("id_field"))
         return jsonify(out), 200 if out["found"] else 404
 
@@ -394,43 +391,39 @@ def create_app(
         # always the ?format=json shape (this engine serves JSON APIs;
         # the ES text-columns default is a terminal nicety, not a
         # contract anyone parses)
-        _attach_if_named()
-        return jsonify(gateway.cat_indices(_spark())), 200
+        return jsonify(gateway.cat_indices(_session())), 200
 
     @app.get("/<index>/_field_caps")
     def es_field_caps_route(index: str):
-        _attach_if_named()
-        return jsonify(gateway.es_field_caps(_spark(), index)), 200
+        return jsonify(gateway.es_field_caps(_session(), index)), 200
 
     @app.post("/<index>/_terms_enum")
     def es_terms_enum_route(index: str):
-        _attach_if_named()
-        return jsonify(gateway.es_terms_enum(_spark(), index,
+        return jsonify(gateway.es_terms_enum(_session(), index,
                                              _es_body())), 200
 
     @app.post("/<index>/_search/template")
     def es_search_template_route(index: str):
-        _attach_if_named()
-        df = gateway.es_search_template_df(_spark(), index, _es_body())
+        df = gateway.es_search_template_df(_session(), index, _es_body())
         res = collect_envelope(df, max_rows=max_rows)
         return jsonify(json.loads(res.to_json())), 200
 
     @app.get("/<index>/_termvectors/<doc_id>")
     def es_termvectors_route(index: str, doc_id: str):
-        _attach_if_named()
+        spark = _session()
         field = request.args.get("fields")
         if not field or "," in field or "*" in field:
             raise ParamsNullError()
         return jsonify(gateway.es_termvectors(
-            _spark(), index, doc_id, field,
+            spark, index, doc_id, field,
             id_field=request.args.get("id_field"),
         )), 200
 
     @app.post("/<index>/_mtermvectors")
     def es_mtermvectors_route(index: str):
-        _attach_if_named()
+        spark = _session()
         return jsonify(gateway.es_mtermvectors(
-            _spark(), index, _es_body(),
+            spark, index, _es_body(),
             id_field=request.args.get("id_field"),
         )), 200
 
@@ -447,49 +440,47 @@ def create_app(
 
     @app.post("/_search/scroll")
     def es_scroll_continue_route():
-        _attach_if_named()
+        spark = _session()
         body = _es_body()
         sid = body.get("scroll_id")
         if not sid:
             raise ParamsNullError()
-        return jsonify(gateway.es_scroll(_spark(), None,
+        return jsonify(gateway.es_scroll(spark, None,
                                          scroll_id=sid,
                                          max_rows=max_rows)), 200
 
     @app.post("/<index>/_explain/<doc_id>")
     def es_explain_route(index: str, doc_id: str):
-        _attach_if_named()
+        spark = _session()
         return jsonify(gateway.es_explain(
-            _spark(), index, doc_id, _es_body(),
+            spark, index, doc_id, _es_body(),
             id_field=request.args.get("id_field"),
         )), 200
 
     @app.get("/_cat/count")
     @app.get("/_cat/count/<index>")
     def es_cat_count_route(index: str | None = None):
-        _attach_if_named()
-        return jsonify(gateway.cat_count(_spark(), index)), 200
+        return jsonify(gateway.cat_count(_session(), index)), 200
 
     @app.get("/_cat/health")
     def es_cat_health_route():
-        _attach_if_named()
-        return jsonify(gateway.cat_health(_spark())), 200
+        return jsonify(gateway.cat_health(_session())), 200
 
     @app.post("/<index>/_validate/query")
     def es_validate_query_route(index: str):
-        _attach_if_named()
+        spark = _session()
         return jsonify(
-            gateway.es_validate_query(_spark(), index, _es_body())
+            gateway.es_validate_query(spark, index, _es_body())
         ), 200
 
     @app.post("/<index>/_mget")
     def es_mget_route(index: str):
-        _attach_if_named()
+        spark = _session()
         body = _es_body()
         if "ids" not in body:
             raise ParamsNullError()
         return jsonify(gateway.es_mget(
-            _spark(), index, body["ids"],
+            spark, index, body["ids"],
             id_field=request.args.get("id_field"))), 200
 
     @app.post("/_analyze")
@@ -502,34 +493,34 @@ def create_app(
 
     @app.post("/<index>/_pit")
     def es_open_pit_route(index: str):
-        _attach_if_named()
+        spark = _session()
         return jsonify(gateway.es_open_pit(
-            _spark(), index, request.args.get("keep_alive"))), 200
+            spark, index, request.args.get("keep_alive"))), 200
 
     @app.post("/_search")
     def es_pit_search_route():
         # index-less _search: the PIT form (the body's pit.id names the
         # snapshot) — the only ES shape where the path has no index
-        _attach_if_named()
+        spark = _session()
         body = _es_body()
         if "pit" not in body:
             raise ParamsNullError()
-        res = gateway.es_pit_search(_spark(), body, max_rows=max_rows)
+        res = gateway.es_pit_search(spark, body, max_rows=max_rows)
         return jsonify(json.loads(res.to_json())), 200
 
     @app.post("/_reindex")
     def es_reindex_route():
-        _attach_if_named()
+        spark = _session()
         body = _es_body()
         if not body:
             raise ParamsNullError()
-        return jsonify(gateway.es_reindex(_spark(), body, _sink())), 200
+        return jsonify(gateway.es_reindex(spark, body, _sink())), 200
 
     @app.post("/_query")
     def esql_route():
         # the ES|QL API (ES 8.11+): {"query": "FROM idx | ..."} ->
         # columnar {columns, values} response, the ES|QL wire shape
-        _attach_if_named()
+        spark = _session()
         body = _es_body()
         if not body.get("query"):
             raise ParamsNullError()
@@ -537,7 +528,7 @@ def create_app(
             esql_df,
         )
 
-        df = esql_df(_spark(), body["query"])
+        df = esql_df(spark, body["query"])
         res = gateway.collect_envelope(df, max_rows=max_rows)
         payload = json.loads(res.to_json())
         return jsonify({
@@ -553,16 +544,15 @@ def create_app(
 
     @app.post("/<index>/_rank_eval")
     def es_rank_eval_route(index: str):
-        _attach_if_named()
+        spark = _session()
         body = _es_body()
         if not body:
             raise ParamsNullError()
-        return jsonify(gateway.es_rank_eval(_spark(), index, body)), 200
+        return jsonify(gateway.es_rank_eval(spark, index, body)), 200
 
     @app.get("/_resolve/index/<pattern>")
     def es_resolve_index_route(pattern: str):
-        _attach_if_named()
-        return jsonify(gateway.es_resolve_index(_spark(), pattern)), 200
+        return jsonify(gateway.es_resolve_index(_session(), pattern)), 200
 
     @app.post("/_aliases")
     def es_update_aliases_route():
@@ -601,7 +591,7 @@ def create_app(
     def es_msearch_route():
         import time as _time  # noqa: PLC0415
 
-        _attach_if_named()
+        spark = _session()
         # the ES NDJSON protocol: alternating header/body lines; the
         # header names the index ({} inherits none here — index is
         # required, matching the gateway's all-or-nothing validation)
@@ -629,7 +619,7 @@ def create_app(
                 )
             searches.append((head.get("index"), body))
         t0 = _time.time()
-        dfs = gateway.es_msearch(_spark(), searches)
+        dfs = gateway.es_msearch(spark, searches)
         responses = []
         for df in dfs:
             res = collect_envelope(df, max_rows=max_rows)

@@ -83,13 +83,25 @@ def query(
 
     ``db_driver``/``db_name`` are optional because a Spark catalog can
     already hold the tables (the reference always needs them since it
-    owns no data; query_controller.go:55-58).
+    owns no data; query_controller.go:55-58). A named source runs on
+    its own child session (``attach``).
     """
     if registry is not None or db_driver is not None or db_name is not None:
         if registry is None or not db_driver or not db_name:
             raise ParamsNullError()
-        registry.attach(spark, db_driver, db_name)
+        spark = attach(spark, registry, db_driver, db_name)
     return collect_envelope(query_df(spark, sql, params=params), max_rows=max_rows)
+
+
+def attach(
+    spark: SparkSession, registry: SourceRegistry, db_driver: str, db_name: str
+) -> SparkSession:
+    """A child session of ``spark`` bound to the named source that reads
+    ``spark``'s aliases. Alias commits rebind the registry dict and
+    never mutate it, so the child holds the aliases as of this call."""
+    child = registry.attach(spark, db_driver, db_name)
+    _ALIASES_BY_SESSION[child] = _aliases(spark)
+    return child
 
 
 def es_search_df(spark: SparkSession, index: str, body: dict) -> DataFrame:

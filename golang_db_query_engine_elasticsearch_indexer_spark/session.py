@@ -2,20 +2,26 @@
 
 Reference parity: base.go:38-66 ``Initialize(dbDriver, dbName)`` opens a
 database handle for a (driver, database) pair read from ``.env``. Here a
-*source* is a directory of Parquet tables registered as temp views in
-the Spark catalog; ``dbDriver`` becomes a registry-name allowlist
-(query_controller.go:46-51) and ``dbName`` selects the directory.
+*source* is a directory of Parquet tables, registered once as a Spark
+catalog database of external tables; ``dbDriver`` becomes a
+registry-name allowlist (query_controller.go:46-51) and ``dbName``
+selects the directory. A request that names a source runs on its own
+child session bound to that database; one that names none reads the
+app session's catalog.
 
 Scale posture: registration is metadata-only (Parquet footers); no data
 moves until a query runs. On a real cluster the same registry would
-point at object-store prefixes and persistent catalog tables.
+point at object-store prefixes and a persistent metastore.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+import threading
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
+from pyspark.sql import types as T
 
 from golang_db_query_engine_elasticsearch_indexer_spark.errors import (
     IncorrectDbDriverError,
@@ -145,9 +151,14 @@ class SourceRegistry:
                 f"Unknown database {db_name!r} for driver {driver!r}"
             ) from None
 
-    def attach(self, spark: SparkSession, driver: str, db_name: str) -> None:
-        """Register the source's tables as temp views (metadata only)."""
-        register_sf_dir(spark, self.resolve(driver, db_name))
+    def attach(self, spark: SparkSession, driver: str, db_name: str) -> SparkSession:
+        """A new child session of ``spark`` bound to the source's database;
+        ``spark`` is left as it is. The child has its own temp views and
+        runtime conf, which starts from the builder-time conf only."""
+        sf_dir = self.resolve(driver, db_name)
+        child = spark.newSession()
+        register_sf_dir(child, sf_dir)
+        return child
 
 
 def default_registry() -> SourceRegistry:
@@ -159,17 +170,6 @@ def default_registry() -> SourceRegistry:
             reg.register_source("parquet", f"sf{sf}", path)
     return reg
 
-
-# Per-session registration memo: (session, sf_dir, tables) of the last
-# registration, so back-to-back queries against the SAME fixture dir
-# skip the ~0.7 s of footer reads + view DDL round-trips (measured: the
-# dominant fixed cost of every driver-contract call — the q1 plan itself
-# runs in 0.23 s). Switching sf_dir (or passing force=True) re-registers,
-# so the contract's dir-switching behavior is unchanged. WeakKeyDict so
-# a stopped session doesn't pin its DataFrames.
-import weakref
-
-_REGISTERED: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 #: Column names of every table register_sf_dir has registered, by
 #: name — the single source of truth the ES|QL compile-time schema
@@ -187,68 +187,66 @@ TABLE_COLUMNS: dict[str, list[str]] = {}
 #: the id is unique per distinct row AND cross-engine deterministic.
 TABLE_UID_SAFE: dict[str, list[str]] = {}
 
+# Serializes database creation, so no session sees a half-built source.
+_CREATE_LOCK = threading.Lock()
 
-def register_sf_dir(
-    spark: SparkSession,
-    sf_dir: str,
-    tables=FIXTURE_TABLES,
-    force: bool = False,
-) -> dict[str, DataFrame]:
-    """Register every fixture table under ``sf_dir`` as a temp view.
+_UID_SAFE_TYPES = (
+    T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+    T.StringType, T.BooleanType, T.DateType, T.DecimalType,
+)
 
-    Reads only Parquet footers — safe at any scale. Missing tables are
-    skipped so partial fixture dirs still register. Idempotent calls
-    (same session + sf_dir + tables) return the memoized registration;
-    pass ``force=True`` after replacing views out-of-band.
+
+def register_sf_dir(spark: SparkSession, sf_dir: str) -> str:
+    """Bind ``spark`` to the catalog database of ``sf_dir``; return its name.
+
+    The database holds one external Parquet table per fixture file
+    present (footer reads only, safe at any scale). It is created once
+    per catalog, so every session of the SparkContext shares it; its
+    location is the warehouse default, never ``sf_dir`` (dropping a
+    database deletes its location). Each call drops the temp views that
+    would shadow the source's tables, then makes the database current.
     """
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import (
-        BooleanType,
-        ByteType,
-        DateType,
-        DecimalType,
-        IntegerType,
-        LongType,
-        ShortType,
-        StringType,
-    )
-
-    uid_safe_types = (
-        ByteType, ShortType, IntegerType, LongType,
-        StringType, BooleanType, DateType, DecimalType,
-    )
-
-    memo = _REGISTERED.get(spark)
-    if not force and memo is not None and memo[0] == (sf_dir, tuple(tables)):
-        return memo[1]
-
-    out: dict[str, DataFrame] = {}
-    for name in tables:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if not os.path.exists(path):
-            continue
-        df = spark.read.parquet(path)
-        for f_ in df.schema.fields:
-            if f_.name in NANO_TS_COLUMNS and isinstance(f_.dataType, LongType):
-                df = df.withColumn(
-                    f_.name,
-                    F.timestamp_micros(F.expr(f"{f_.name} div 1000")).cast("timestamp_ntz"),
-                )
-        df.createOrReplaceTempView(name)
-        out[name] = df
-        TABLE_COLUMNS[name] = [f_.name for f_ in df.schema.fields]
-        TABLE_UID_SAFE[name] = [
-            f_.name for f_ in df.schema.fields
-            if isinstance(f_.dataType, uid_safe_types)
-        ]
-    _REGISTERED[spark] = ((sf_dir, tuple(tables)), out)
-    return out
+    sf_dir = os.path.realpath(sf_dir)
+    # named by the realpath: a label such as ``sf0.01`` may name
+    # different directories
+    db = "src_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12]
+    paths = {t: os.path.join(sf_dir, f"{t}.parquet") for t in FIXTURE_TABLES}
+    paths = {t: p for t, p in paths.items() if os.path.exists(p)}
+    with _CREATE_LOCK:
+        if not spark.catalog.databaseExists(db):
+            spark.sql(f"CREATE DATABASE {db}")
+            try:
+                for name, path in paths.items():
+                    _create_table(spark, db, name, path)
+            except Exception:
+                spark.sql(f"DROP DATABASE {db} CASCADE")
+                raise
+    for name in paths:
+        spark.catalog.dropTempView(name)
+    spark.catalog.setCurrentDatabase(db)
+    return db
 
 
-def invalidate_registration(spark: SparkSession) -> None:
-    """Drop the registration memo for ``spark`` so the next
-    ``register_sf_dir`` call re-registers unconditionally. Called by
-    any code path that creates/replaces temp views OUT-OF-BAND of the
-    fixture registry (e.g. ``sources.register_dir``) — otherwise a
-    memo hit would leave a clobbered same-named view in place."""
-    _REGISTERED.pop(spark, None)
+def _create_table(spark: SparkSession, db: str, name: str, path: str) -> None:
+    """Create ``db.name`` over ``path`` and publish its columns. Where a
+    NANO_TS_COLUMNS column surfaces as LongType, ``db.name`` is a view
+    converting it to timestamp_ntz over the raw table ``db._raw_name``."""
+    schema = spark.read.parquet(path).schema
+    nanos = {
+        f.name for f in schema.fields
+        if f.name in NANO_TS_COLUMNS and isinstance(f.dataType, T.LongType)
+    }
+    table = f"{db}._raw_{name}" if nanos else f"{db}.{name}"
+    spark.catalog.createTable(table, path=path, source="parquet", schema=schema)
+    if nanos:
+        cols = ", ".join(
+            f"CAST(timestamp_micros(`{c}` div 1000) AS TIMESTAMP_NTZ) AS `{c}`"
+            if c in nanos else f"`{c}`"
+            for c in schema.names
+        )
+        spark.sql(f"CREATE VIEW {db}.{name} AS SELECT {cols} FROM {table}")
+    TABLE_COLUMNS[name] = schema.names
+    TABLE_UID_SAFE[name] = [
+        f.name for f in schema.fields
+        if f.name not in nanos and isinstance(f.dataType, _UID_SAFE_TYPES)
+    ]

@@ -102,11 +102,9 @@ def register_dir(
 ) -> dict[str, DataFrame]:
     """Register every recognized table file/dir under ``directory`` as a
     temp view named after its basename. Metadata-only (generalizes
-    session.register_sf_dir beyond the fixture layout/format)."""
-    from golang_db_query_engine_elasticsearch_indexer_spark.session import (  # noqa: PLC0415 — avoid import cycle
-        invalidate_registration,
-    )
-
+    session.register_sf_dir beyond the fixture layout/format). A view
+    that shadows a source table lasts until the next register_sf_dir
+    on ``spark``, which drops it."""
     out: dict[str, DataFrame] = {}
     for entry in sorted(os.listdir(directory)):
         base, ext = os.path.splitext(entry)
@@ -116,10 +114,6 @@ def register_dir(
         df = read_table(spark, os.path.join(directory, entry), efmt, options)
         df.createOrReplaceTempView(base)
         out[base] = df
-    if out:
-        # these views may shadow fixture names; force the next
-        # register_sf_dir to re-establish them
-        invalidate_registration(spark)
     return out
 
 

@@ -58,7 +58,10 @@ def _scoped_stream_partitions(spark: SparkSession):
     """Set the stream-sized shuffle partition count for the lifetime of
     one bounded streaming query, restoring the session's batch value
     after (the conf is read at query start and inside foreachBatch
-    bodies; scoping it keeps every batch entry's plan width untouched)."""
+    bodies; scoping it keeps every batch entry's plan width untouched).
+    The swap is visible to anything else running on ``spark``, so
+    streams on one session must run serially, as the driver contract
+    runs them; API requests run on their own child sessions."""
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set(
         "spark.sql.shuffle.partitions", str(_stream_state_partitions())

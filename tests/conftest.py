@@ -11,6 +11,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from golang_db_query_engine_elasticsearch_indexer_spark.oracle import duckdb_connection
 from golang_db_query_engine_elasticsearch_indexer_spark.session import (
+    FIXTURE_TABLES,
     build_session,
     register_sf_dir,
 )
@@ -37,7 +38,9 @@ def sf_dir():
 
 @pytest.fixture(scope="session")
 def tables(spark, sf_dir):
-    return register_sf_dir(spark, sf_dir)
+    db = register_sf_dir(spark, sf_dir)
+    return {t: spark.table(f"{db}.{t}") for t in FIXTURE_TABLES
+            if spark.catalog.tableExists(f"{db}.{t}")}
 
 
 @pytest.fixture(scope="session")

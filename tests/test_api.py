@@ -1033,6 +1033,83 @@ def test_es_alias_multi_target_search(client, clean_aliases):
     assert len(hits) == n_alias["count"]
 
 
+def test_alias_reaches_a_named_source_request(client, clean_aliases):
+    """An alias written on the app session resolves in a request that
+    names a source, which runs on its own child session."""
+    assert client.post("/_aliases", json={"actions": [
+        {"add": {"index": "orders", "alias": "al_t"}}]}).status_code == 200
+    body = {"query": {"range": {"o_totalprice": {"gte": 1000}}},
+            "sort": [{"o_orderkey": "asc"}], "size": 7}
+    via = client.post("/al_t/_search?dbDriver=parquet&dbName=testdb", json=body)
+    direct = client.post("/orders/_search", json=body)
+    assert via.status_code == direct.status_code == 200
+    assert via.get_json()["data"] == direct.get_json()["data"]
+    assert len(direct.get_json()["data"]) == 7
+
+
+_JOIN_SQL = (
+    "SELECT c_mktsegment, count(*) AS n, sum(o_totalprice) AS t FROM orders "
+    "JOIN customer ON o_custkey = c_custkey GROUP BY c_mktsegment ORDER BY c_mktsegment"
+)
+
+
+def test_concurrent_requests_answer_from_the_source_they_name(spark, tables):
+    """Four clients alternating between two sources each get the answer
+    of the source they name. Requests re-pointing one session's shared
+    views answered about a third of these from the other source, all
+    with HTTP 200. A request's child session carries the engine's
+    runtime conf and the app session's shuffle width."""
+    import threading
+
+    from golang_db_query_engine_elasticsearch_indexer_spark import gateway
+    from golang_db_query_engine_elasticsearch_indexer_spark.session import RUNTIME_CONF
+    from tests.conftest import SF_DIR_ORACLE
+
+    reg = SourceRegistry()
+    reg.register_source("parquet", "small", SF_DIR)
+    reg.register_source("parquet", "large", SF_DIR_ORACLE)
+    app = create_app(spark=spark, registry=reg)
+
+    def ask(c, db):
+        r = c.get("/query/", query_string={
+            "dbDriver": "parquet", "dbName": db, "query": _JOIN_SQL})
+        return r.status_code, r.get_json()["data"] if r.status_code == 200 else r.data
+
+    def same(got, want):
+        return got[0] == 200 and len(got[1]) == len(want) and all(
+            (g["c_mktsegment"], g["n"]) == (w["c_mktsegment"], w["n"])
+            and g["t"] == pytest.approx(w["t"], rel=1e-9)
+            for g, w in zip(got[1], want))
+
+    want = {db: ask(app.test_client(), db) for db in ("small", "large")}
+    assert all(code == 200 for code, _ in want.values())
+    assert want["small"][1][0]["n"] != want["large"][1][0]["n"]
+    want = {db: rows for db, (_, rows) in want.items()}
+    answers: list = []
+
+    def client_loop(k):
+        c = app.test_client()
+        for i in range(15):
+            db = ("small", "large")[(k + i) % 2]
+            answers.append((db, ask(c, db)))
+
+    threads = [threading.Thread(target=client_loop, args=(k,)) for k in range(4)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert len(answers) == 60
+    wrong = [(db, got[0]) for db, got in answers if not same(got, want[db])]
+    assert not wrong, f"{len(wrong)} of 60 answers wrong: {wrong[:5]}"
+
+    child = gateway.attach(spark, reg, "parquet", "small")
+    assert child is not spark
+    for k, v in RUNTIME_CONF.items():
+        assert child.conf.get(k) == v, k
+    assert child.conf.get("spark.sql.shuffle.partitions") == spark.conf.get(
+        "spark.sql.shuffle.partitions")
+
+
 def test_es_mtermvectors_route(client):
     """_mtermvectors: one statement for N docs; missing ids report
     found=false, the ES docs-envelope shape."""

@@ -38,7 +38,7 @@ def test_csv_json_round_trip(spark, tables, tmp_path):
 
     got_json = sources.register_dir(spark, str(tmp_path / "jsondb"))
     assert got_json["region"].count() == 5
-    # re-register the fixture views (round-trip clobbered 'region')
+    # drop the 'region' view that shadows the fixture table
     from golang_db_query_engine_elasticsearch_indexer_spark.session import (
         register_sf_dir,
     )
@@ -120,41 +120,99 @@ def test_jdbc_federation_live_roundtrip_derby(spark, tables, tmp_path):
     assert "JDBCRelation" in plan and "PushedFilters" in plan
 
 
-def test_register_sf_dir_memo_semantics(spark, tables, sf_dir):
-    """The per-session registration memo: same (session, dir) returns
-    the memoized registration without re-reading footers; switching
-    dirs re-registers; force=True and invalidate_registration()
-    re-register in place (the escape hatches after replacing views
-    out-of-band). Ends by force-restoring the suite's fixture dir so
-    session-scoped state doesn't leak into later tests."""
+def test_register_sf_dir_contract(spark, tables, sf_dir, tmp_path, monkeypatch):
+    """One catalog database per source directory: created once, made
+    current by each call, shadowing temp views dropped by the next
+    call, and a failed creation leaves no database behind."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from golang_db_query_engine_elasticsearch_indexer_spark import session
+    from golang_db_query_engine_elasticsearch_indexer_spark.session import register_sf_dir
     from tests.conftest import SF_DIR_ORACLE
 
-    from golang_db_query_engine_elasticsearch_indexer_spark.session import (
-        invalidate_registration,
-        register_sf_dir,
-    )
+    def databases():
+        return {d.name for d in spark.catalog.listDatabases()}
+
+    def counts():
+        return [spark.table(t).count() for t in ("orders", "customer")]
+
+    def file_counts(d):
+        return [pq.read_metadata(f"{d}/{t}.parquet").num_rows for t in ("orders", "customer")]
 
     try:
-        a = register_sf_dir(spark, sf_dir)
-        b = register_sf_dir(spark, sf_dir)
-        assert b is a  # memo hit: identical dict, no re-registration
-        c = register_sf_dir(spark, SF_DIR_ORACLE)
-        assert c is not a
-        assert spark.table("customer").count() == c["customer"].count()
-        d = register_sf_dir(spark, sf_dir)
-        assert d is not a  # dir switch always re-registers (fresh dict)
-        # out-of-band view replacement: memo is blind until force /
-        # invalidation
+        db = register_sf_dir(spark, sf_dir)
+        dbs = databases()
+
+        def must_not_create(*a):
+            raise AssertionError("second call re-created a table")
+
+        with monkeypatch.context() as m:
+            m.setattr(session, "_create_table", must_not_create)
+            assert register_sf_dir(spark, sf_dir) == db
+        assert databases() == dbs and spark.catalog.currentDatabase() == db
+        assert counts() == file_counts(sf_dir)
+
+        other = register_sf_dir(spark, SF_DIR_ORACLE)
+        assert other != db and spark.catalog.currentDatabase() == other
+        assert counts() == file_counts(SF_DIR_ORACLE) != file_counts(sf_dir)
+        register_sf_dir(spark, sf_dir)
+        assert counts() == file_counts(sf_dir)
+
         spark.range(3).toDF("doc_id").createOrReplaceTempView("documents")
-        assert register_sf_dir(spark, sf_dir) is d
-        register_sf_dir(spark, sf_dir, force=True)
-        assert "text" in spark.table("documents").columns  # restored
-        spark.range(3).toDF("doc_id").createOrReplaceTempView("documents")
-        invalidate_registration(spark)
-        register_sf_dir(spark, sf_dir)  # no force needed post-invalidate
+        register_sf_dir(spark, sf_dir)
         assert "text" in spark.table("documents").columns
+
+        bad = tmp_path / "bad"
+        bad.mkdir()
+        shutil.copy(f"{sf_dir}/region.parquet", bad / "region.parquet")
+        (bad / "orders.parquet").write_text("not parquet")
+        dbs = databases()
+        with pytest.raises(Exception):
+            register_sf_dir(spark, str(bad))
+        assert databases() == dbs
+        assert spark.catalog.currentDatabase() == db
     finally:
-        register_sf_dir(spark, sf_dir, force=True)
+        register_sf_dir(spark, sf_dir)
+
+
+def test_nanosecond_timestamps_surface_as_timestamp_ntz(spark, tables, sf_dir, tmp_path):
+    """TIMESTAMP(NANOS) columns, read as LongType under nanosAsLong,
+    are registered as timestamp_ntz with the values written."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from golang_db_query_engine_elasticsearch_indexer_spark import session
+    from golang_db_query_engine_elasticsearch_indexer_spark.session import register_sf_dir
+
+    when = [dt.datetime(1995, 3, 15, 0, 0), dt.datetime(2024, 2, 29, 23, 59, 58, 123456)]
+    for table, key, col in (("orders", "o_orderkey", "o_orderdate"),
+                            ("lineitem", "l_orderkey", "l_shipdate"),
+                            ("events", "event_id", "ts")):
+        pq.write_table(pa.table({
+            key: pa.array([1, 2], pa.int64()),
+            col: pa.array(when, pa.timestamp("ns")),
+        }), tmp_path / f"{table}.parquet", version="2.6")
+        assert pq.read_schema(tmp_path / f"{table}.parquet").field(col).type == pa.timestamp("ns")
+    saved = {k: dict(getattr(session, k)) for k in ("TABLE_COLUMNS", "TABLE_UID_SAFE")}
+    assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+    try:
+        register_sf_dir(spark, str(tmp_path))
+        for table, key, col in (("orders", "o_orderkey", "o_orderdate"),
+                                ("lineitem", "l_orderkey", "l_shipdate"),
+                                ("events", "event_id", "ts")):
+            df = spark.table(table)
+            assert df.schema[col].dataType.simpleString() == "timestamp_ntz", table
+            assert [r[col] for r in df.orderBy(key).collect()] == when, table
+            assert col not in session.TABLE_UID_SAFE[table]
+    finally:
+        for k, v in saved.items():
+            getattr(session, k).clear()
+            getattr(session, k).update(v)
+        register_sf_dir(spark, sf_dir)
 
 
 def test_partitioned_parquet_write_prunes_partitions(spark, tables, tmp_path):
