@@ -15,7 +15,8 @@ Reference parity (SURVEY.md §2.A A9-A16, elastic_controller.go):
   We reproduce the positional-ID + stale-tail semantics exactly, but
   over a *deterministic total order* (SURVEY.md §7 hard-part #1),
   assigned scalably: range-partitioned sort, per-partition row_number,
-  plus broadcast per-partition offsets — no single-partition window.
+  plus per-partition offsets passed as one literal array — no
+  single-partition window and no join.
 - Sinks are pluggable (§4.3): a local JSONL index models
   auto-create / positional upsert / failure accounting for offline
   tests; the Elasticsearch sink carries the reference's bulk tuning
@@ -30,6 +31,7 @@ import os
 import shutil
 import time
 from dataclasses import dataclass, field
+from itertools import accumulate
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -92,7 +94,8 @@ def with_positional_ids(
 
     1. global sort (range partitioning preserves order across partitions)
     2. per-partition row_number (narrow)
-    3. per-partition counts -> broadcast cumulative offsets (tiny)
+    3. per-partition counts -> cumulative offsets, passed as one literal
+       ``long`` array indexed by partition id (no join, no extra job)
 
     The sorted frame is materialized (load-bearing — see inline
     comment). Two modes:
@@ -142,30 +145,19 @@ def with_positional_ids(
         ordered = ordered.persist()
         if release is not None:
             release.append(ordered)
-    counts = sorted(
-        (r["__pid"], r["cnt"])
-        for r in ordered.groupBy("__pid").agg(F.count("*").alias("cnt")).collect()
-    )
-    offsets, acc = {}, 0
-    for pid, cnt in counts:
-        offsets[pid] = acc
-        acc += cnt
-    spark = df.sparkSession
-    offset_df = F.broadcast(
-        spark.createDataFrame(
-            [(pid, off) for pid, off in offsets.items()] or [(0, 0)],
-            "__pid int, __offset long",
-        )
-    )
-    out = (
-        ordered.join(offset_df, "__pid", "left")
-        .withColumn(
-            ID_COL,
-            (F.coalesce(F.col("__offset"), F.lit(0)) + F.col("__idx") + 1).cast("long"),
-        )
-        .drop("__pid", "__idx", "__offset", "__sort_key")
-    )
-    return out
+    # Offsets ride in the projection as one literal array indexed by the
+    # cached __pid. A partition with no rows has no count row, so the
+    # array spans 0..max(__pid) with zeros filled in (ANSI element_at
+    # raises out of range) and holds one entry for an empty frame.
+    counts = dict(ordered.groupBy("__pid").count().collect())
+    sizes = [counts.get(pid, 0) for pid in range(max(counts, default=0) + 1)]
+    offsets = list(accumulate(sizes, initial=0))[:-1]
+    return ordered.withColumn(
+        ID_COL,
+        F.element_at(F.lit(offsets).cast("array<long>"), F.col("__pid") + 1)
+        + F.col("__idx")
+        + 1,
+    ).drop("__pid", "__idx", "__sort_key")
 
 
 class JsonlIndexSink:
@@ -338,7 +330,7 @@ def post_bulk_ndjson(
     """POST one ``_bulk`` NDJSON body and return (ok, failed) item
     counts — request-level retry with linear backoff on the
     reference's status set (elastic_controller.go:52-64). Module-level
-    so BOTH executor paths share it: HttpBulkSink's ``mapInPandas``
+    so BOTH executor paths share it: HttpBulkSink's ``mapInArrow``
     partitions and the Python Data Source task writer
     (sources/es_datasource.py)."""
     import json as _json  # noqa: PLC0415 — executor-side
@@ -379,9 +371,12 @@ class HttpBulkSink:
 
     Scale shape:
 
-    - rows are JSON-serialized JVM-side (``to_json`` over a struct), so
-      Python only receives ``(_id, doc_json)`` string pairs through
-      Arrow — the document never round-trips a Python object;
+    - both NDJSON lines are rendered JVM-side (``to_json`` over the
+      action struct and over the document struct), so Python only
+      receives ``(action, doc)`` string pairs through ``mapInArrow`` —
+      no pandas hop, no per-row ``json.dumps``, and the document never
+      round-trips a Python object; each partition returns one
+      ``(n_ok, n_failed)`` row, summed on the driver (no shuffle);
     - each partition accumulates NDJSON action/source line pairs and
       POSTs when the buffer reaches ``flush_bytes`` (5 MB default,
       parity elastic_controller.go:46) — executor memory held per task
@@ -537,9 +532,12 @@ class HttpBulkSink:
         self.ensure_index(index_name, schema=df_with_id.drop(ID_COL).schema)
 
         doc_cols = [c for c in df_with_id.columns if c != ID_COL]
+        meta = F.struct(
+            F.lit(index_name).alias("_index"), F.col(ID_COL).cast("string").alias("_id")
+        )
         payload = df_with_id.select(
-            F.col(ID_COL).cast("string").alias("__id"),
-            F.to_json(F.struct(*doc_cols)).alias("__doc"),
+            F.to_json(F.struct(meta.alias("index"))).alias("action"),
+            F.to_json(F.struct(*doc_cols)).alias("doc"),
         )
 
         base_url = self.base_url
@@ -552,10 +550,9 @@ class HttpBulkSink:
         flush_interval = self.flush_interval_sec
 
         def send_partition(batches):
-            import json as _json
             import time as _time
 
-            import pandas as pd
+            import pyarrow as pa
 
             from golang_db_query_engine_elasticsearch_indexer_spark.indexer import (
                 post_bulk_ndjson,
@@ -576,11 +573,9 @@ class HttpBulkSink:
             lines: list[str] = []
             buf_size = 0
             last_flush = _time.monotonic()
-            for pdf in batches:
-                for doc_id, doc in zip(pdf["__id"], pdf["__doc"]):
-                    action = _json.dumps(
-                        {"index": {"_index": index_name, "_id": doc_id}}
-                    )
+            for batch in batches:
+                actions, docs = (c.to_pylist() for c in batch.columns)
+                for action, doc in zip(actions, docs):
                     lines.extend((action, doc))
                     buf_size += len(action) + len(doc) + 2
                     if buf_size >= flush_bytes or (
@@ -595,20 +590,14 @@ class HttpBulkSink:
                 ok, failed = post_bulk(lines)
                 n_ok += ok
                 n_failed += failed
-            yield pd.DataFrame({"n_ok": [n_ok], "n_failed": [n_failed]})
+            yield pa.RecordBatch.from_pydict({"n_ok": [n_ok], "n_failed": [n_failed]})
 
-        counts = (
-            payload.mapInPandas(send_partition, "n_ok long, n_failed long")
-            .agg(
-                F.sum("n_ok").alias("ok"),
-                F.sum("n_failed").alias("failed"),
-            )
-            .collect()[0]
-        )
+        # One (n_ok, n_failed) row per partition: summed here, no shuffle.
+        counts = payload.mapInArrow(send_partition, "n_ok long, n_failed long").collect()
         return IndexStats(
             index_name,
-            num_docs=int(counts.ok or 0),
-            num_failed=int(counts.failed or 0),
+            num_docs=sum(r.n_ok for r in counts),
+            num_failed=sum(r.n_failed for r in counts),
             took_sec=time.time() - t0,
         )
 

@@ -21,11 +21,15 @@ SF_DIR_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.
 
 
 @pytest.fixture(scope="session")
-def spark():
+def spark(tmp_path_factory):
+    # The warehouse dir is static conf: set at build time so the catalog
+    # databases each source registers land in a per-run temp dir, not
+    # in the checkout.
     s = build_session(
         app_name="engine-tests",
         master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]",
         shuffle_partitions=8,
+        extra_conf={"spark.sql.warehouse.dir": str(tmp_path_factory.mktemp("warehouse"))},
     )
     yield s
     s.stop()

@@ -5,6 +5,8 @@ semantics, document shape equality with /query/ rows, ES option parity.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from golang_db_query_engine_elasticsearch_indexer_spark import indexer
@@ -121,6 +123,49 @@ def test_http_bulk_roundtrip_and_autocreate(spark, tables, es_stub):
     # positional ids 1..n arrived as the _id routing key
     assert set(docs) == {str(i) for i in range(1, n + 1)}
     assert set(docs["1"]) == {"o_orderkey", "o_orderstatus", "o_totalprice"}
+
+
+def test_http_bulk_empty_result(spark, tables, es_stub):
+    """A query with no rows still creates the index (HEAD-then-PUT,
+    elastic_controller.go:161-181), posts no _bulk request and counts
+    nothing — the positional offsets of an empty frame stay in range."""
+    stub = es_stub()
+    sink = HttpBulkSink(stub.base_url)
+    stats = save(spark, SQL + " AND o_totalprice < 0", "orders_empty", sink)
+    assert stats.num_docs == 0 and stats.num_failed == 0
+    assert stub.bulk_requests == 0
+    assert "orders_empty" in stub.indexes
+
+
+def test_http_bulk_positional_ids_at_sf01(spark, sf_dir, es_stub):
+    """One save at 10x the oracle scale (150,000 docs over several range
+    partitions): doc ``_id`` i carries the i-th smallest o_orderkey, read
+    independently of Spark by DuckDB. The source is bound on a child
+    session so the shared session's current database is untouched."""
+    from golang_db_query_engine_elasticsearch_indexer_spark.oracle import duckdb_connection
+    from golang_db_query_engine_elasticsearch_indexer_spark.session import register_sf_dir
+
+    sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.1")
+    if not os.path.isdir(sf01):
+        pytest.skip(f"{sf01} absent")
+    child = spark.newSession()
+    register_sf_dir(child, sf01)
+    stub = es_stub()
+    stats = save(
+        child,
+        "SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders",
+        "orders_sf01",
+        HttpBulkSink(stub.base_url),
+    )
+    con = duckdb_connection(sf01)
+    try:
+        rows = con.execute("SELECT o_orderkey FROM orders ORDER BY o_orderkey").fetchall()
+        keys = [k for (k,) in rows]
+    finally:
+        con.close()
+    docs = stub.docs("orders_sf01")
+    assert stats.num_docs == len(keys) == len(docs) and stats.num_failed == 0
+    assert [docs[str(i)]["o_orderkey"] for i in range(1, len(keys) + 1)] == keys
 
 
 def test_http_bulk_explicit_mapping_from_schema(spark, tables, es_stub):
