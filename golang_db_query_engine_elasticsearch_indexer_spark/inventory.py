@@ -1834,10 +1834,11 @@ _HQ_QS_VALUES = (
 
 # CTE list + final select, parameterized on the vals relation name and
 # the integer-division token. The ORACLE chains vals as a CTE (DuckDB
-# materializes it); the Spark engine persists vals as a temp view
-# first (operators/materialized.py) because Spark would inline the
-# three vals references into three lineitem scans (11 scans total in
-# the one-query form).
+# materializes it). The Spark engine (operators/materialized.py)
+# persists vals once, since Spark would inline the three vals
+# references into three lineitem scans (11 scans total in the
+# one-query form), and runs the fixed-size tail (bounds, the 128-bin
+# histograms, pick) on the driver.
 #
 # Exact-quantile tail (r13 optimization): the exact rank lookup is
 # bin-local, not a global prefix sum — the original
@@ -1921,23 +1922,14 @@ _HQ_TAIL_SQL = """
 """
 
 
-def _hq_stage_sqls(vals: str, idiv: str, bounds: str, binned: str):
-    """(bounds, binned, cum) stage bodies — the Spark side materializes
-    these (bounds is 1 row, cum is BINS rows; binned is a row-local
-    projection of the vals cache) so the tail's many references read
-    tiny pinned relations instead of recomputing vals-cache
-    aggregations per reference."""
-    return (
-        _HQ_BOUNDS_SQL.format(vals=vals),
-        _HQ_BINNED_SQL.format(vals=vals, bounds=bounds, BINS=_HQ_BINS, IDIV=idiv),
-        _HQ_CUM_SQL.format(binned=binned),
-    )
-
-
 def _hq_tail(vals: str, idiv: str) -> str:
     """Fully chained CTE form (the ORACLE text; DuckDB materializes each
     CTE once, so chaining is also the efficient shape there)."""
-    b_sql, bin_sql, cum_sql = _hq_stage_sqls(vals, idiv, "bounds", "binned")
+    b_sql = _HQ_BOUNDS_SQL.format(vals=vals)
+    bin_sql = _HQ_BINNED_SQL.format(
+        vals=vals, bounds="bounds", BINS=_HQ_BINS, IDIV=idiv
+    )
+    cum_sql = _HQ_CUM_SQL.format(binned="binned")
     return (
         f"bounds AS ({b_sql}),\n"
         f"    binned AS ({bin_sql}),\n"
@@ -1951,7 +1943,8 @@ def _hq_tail(vals: str, idiv: str) -> str:
 
 def _histogram_quantiles_entry() -> None:
     # The chained text below is the SPEC formulation; the executable
-    # Spark side is operators/materialized.py (vals persisted once).
+    # Spark side is operators/materialized.py (vals persisted once,
+    # bounds and histograms collected to the driver).
     # The oracle IS this chained form with DuckDB's // division.
     chained = "WITH vals AS (" + _HQ_VALS_SQL + "),\n"
     _q_staged(
@@ -3108,12 +3101,24 @@ def _bloom_pos(key: str, salt: int, m_bits: int = 65536) -> str:
     MinHash permutations (10 hex digits < 2^40 keeps the mod in exact
     BIGINT range), so Spark and DuckDB compute bit-identical positions.
     """
+    return _bloom_fold(_bloom_md5(key, salt), m_bits)
+
+
+def _bloom_md5(key: str, salt: int) -> str:
+    """The salted md5 hex string under one Bloom position."""
+    return f"md5(concat(cast({key} AS string), '#{salt}'))"
+
+
+def _bloom_fold(md5_expr: str, m_bits: int = 65536) -> str:
+    """A Bloom position from its salted md5 hex string. hex_prefix_int
+    names the string once per digit, so a caller that binds the md5 to
+    a column first folds that column instead of repeating the md5 call
+    10 times."""
     from golang_db_query_engine_elasticsearch_indexer_spark.functions import (
         hex_prefix_int,
     )
 
-    salted = f"md5(concat(cast({key} AS string), '#{salt}'))"
-    return f"({hex_prefix_int(salted, 10)} % {m_bits})"
+    return f"({hex_prefix_int(md5_expr, 10)} % {m_bits})"
 
 
 def _bloom_sql() -> str:

@@ -6,24 +6,41 @@ subtree, and chains of such references multiply (measured: 63 scans
 for the 6-round BPE chain, 18 for the Bloom audit, 18 for the triangle
 census). DuckDB materializes each CTE once, so the chained-CTE text
 stays correct AND efficient there — which is exactly what the oracle
-needs. These Spark implementations therefore persist each shared
-relation as a temp view, run the identical SQL tail against the
-caches, and release everything after an eager ``localCheckpoint``
-freezes the (small) result — the ``dedup.components`` lineage
-discipline applied to the CTE-inlining pitfall. Values are unchanged;
-only the physical plan differs, which the unchanged driver hashes
-prove.
+needs. The Spark implementations here persist each shared relation
+once and freeze the (small) result with an eager ``localCheckpoint``
+before releasing it — the ``dedup.components`` lineage discipline
+applied to the CTE-inlining pitfall. Values are unchanged; only the
+physical plan differs, which the registry differential proves.
+
+Two shapes:
+
+- ``materialized_chain`` (stickiness, revenue concentration,
+  ``pipeline``) registers each stage as a temp view and runs the
+  oracle's SQL tail against the caches.
+- ``histogram_quantiles`` and ``bloom_prefilter`` persist ONE relation
+  and bring every intermediate that does not grow with scale (bounds,
+  the 128-bin histograms, the 1,024 bitmap words) to the driver, which
+  writes it back into the final statement as literals. Each runs a few
+  statements instead of a chain whose tail AQE splits into ~30 jobs,
+  and composes them on the persisted DataFrame, with no view: a
+  fixed-name view collides between concurrent calls on one session,
+  and dropping a view whose plan is the persisted relation's (as the
+  ``spark.sql`` keyword formatter does when ``sql()`` returns)
+  uncaches it.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 #: Observability hook for plan capture (tools/capture_plans.py
 #: --internals): when set to a list, materialized_chain appends
 #: ``(stage_name, formatted_plan)`` for every stage it runs plus the
-#: final statement — the INTERNAL plans an eager localCheckpoint hides
-#: from the returned frame's explain. Never set in production paths.
+#: final statement (the histogram and Bloom kernels append their final
+#: statement, and Bloom its word aggregate) — the INTERNAL plans an
+#: eager localCheckpoint hides from the returned frame's explain. Never
+#: set in production paths.
 PLAN_CAPTURE: list | None = None
 
 
@@ -81,52 +98,62 @@ def materialized_chain(
 
 def bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark side of the Bloom pre-filter audit (oracle: the chained
-    form in ``inventory._bloom_sql``). ``dim`` and ``probe`` are each
-    consumed by 4-5 downstream relations; inlined, the one-query form
-    re-ran the DISTINCT over the fact table five times (18 scans
-    total). Staged: orders and lineitem are scanned ONCE each.
+    form in ``inventory._bloom_sql``). Two actions over one persisted
+    relation, ``dim``; orders and lineitem are each scanned once.
 
     The membership test materializes the ACTUAL Bloom bitmap: the dim
     side's m=65536 positions fold into 1024 BIGINT words in-plan
     (``bit_or`` of single-bit values — map-side, <=1024 rows out
     regardless of dim cardinality), the words are collected once and
-    inlined as a constant-foldable array literal, and the pass stage
-    becomes a row-local bit test over the probe cache — zero joins,
-    zero broadcast builds. The r13 form (3 broadcast semi-joins
-    against the position set) re-built the same 49k-row broadcast
-    three times inside one action: profiled at 3.7-6.2 s of the
-    kernel's 5.5 s warm total at sf0.1; the bit-test pass runs the
-    identical membership in 1.5 s (interleaved min-of-3, counts
-    byte-identical). Same result by construction: bit p set in the
-    word array <=> p in the DISTINCT position set, and the conjunction
-    over k salts is unchanged; the oracle keeps the exploded
+    inlined as a constant-foldable array literal, and the pass flag is
+    a row-local bit test on each DISTINCT probe key — no join, no
+    broadcast build for membership. Same result by construction: bit p
+    set in the word array <=> p in the DISTINCT position set, and the
+    conjunction over k salts is unchanged; the oracle keeps the exploded
     join+HAVING formulation, so the differential pins the equivalence.
+
+    The five counts are one conditional aggregate over the probe keys
+    LEFT JOINed to ``dim``: ``dim`` is DISTINCT, so the join never fans
+    out, a key with a dim match is a true match, and ``n_missed`` counts
+    the true matches that fail the test. Each salt's md5 is bound to a
+    column once per key (``h0..h2``) and folded from there; the inline
+    ``_bloom_pos`` form repeats the md5 call once per hex digit.
     """
     from golang_db_query_engine_elasticsearch_indexer_spark.inventory import (  # noqa: PLC0415
-        _bloom_pos,
+        _bloom_fold,
+        _bloom_md5,
     )
 
     k_hashes = 3
-    n_words = 65536 // 64  # bitmap words for _bloom_pos's fixed m_bits
-    dim_pos = "\nUNION ALL ".join(
-        f"SELECT {_bloom_pos('k', s)} AS pos FROM __blm_dim"
-        for s in range(k_hashes)
-    )
+    n_words = 65536 // 64  # bitmap words for _bloom_fold's fixed m_bits
+
+    def positions(keys: DataFrame) -> DataFrame:
+        return keys.selectExpr(
+            "k", *(f"{_bloom_md5('k', s)} AS h{s}" for s in range(k_hashes))
+        ).selectExpr(
+            "k", *(f"{_bloom_fold(f'h{s}')} AS p{s}" for s in range(k_hashes))
+        )
+
     dim = spark.sql(
         "SELECT DISTINCT o_orderkey AS k FROM orders"
         " WHERE o_totalprice > 400000"
     ).persist()
-    dim.createOrReplaceTempView("__blm_dim")
     try:
         # One aggregate job folds every dim position into its bitmap
         # word (bit_or is idempotent, so no DISTINCT pass is needed);
         # the collect moves <=1024 rows whatever the scale factor.
-        word_rows = spark.sql(
-            f"SELECT pos DIV 64 AS w,"
-            f" bit_or(shiftleft(1L, cast(pos % 64 AS INT))) AS bits"
-            f" FROM ({dim_pos}) d GROUP BY pos DIV 64"
-        ).collect()
-        words = {int(r["w"]): int(r["bits"]) for r in word_rows}
+        ps = ", ".join(f"p{s}" for s in range(k_hashes))
+        words_df = (
+            positions(dim)
+            .selectExpr(f"explode(array({ps})) AS pos")
+            .selectExpr(
+                "pos DIV 64 AS w", "shiftleft(1L, cast(pos % 64 AS INT)) AS bit"
+            )
+            .groupBy("w")
+            .agg(F.expr("bit_or(bit)").alias("bits"))
+        )
+        _capture("__blm_words", words_df)
+        words = {int(r["w"]): int(r["bits"]) for r in words_df.collect()}
         arr_lit = "array(" + ",".join(
             f"{words.get(i, 0)}L" for i in range(n_words)
         ) + ")"
@@ -141,87 +168,143 @@ def bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f" cast({p} % 64 AS INT)) & 1) = 1)"
             )
 
-        pos_proj = ", ".join(
-            f"{_bloom_pos('k', s)} AS p{s}" for s in range(k_hashes)
+        hit = " AND ".join(_bit_test(f"p{s}") for s in range(k_hashes))
+        probe = positions(
+            spark.sql("SELECT DISTINCT l_orderkey AS k FROM lineitem")
+        ).selectExpr("k", f"{hit} AS hit")
+        final = (
+            probe.join(dim.selectExpr("k AS dk"), F.expr("k = dk"), "left")
+            .agg(
+                F.expr("count(*)").alias("n_probe"),
+                F.expr("count_if(hit)").alias("n_bloom_pass"),
+                F.expr("count_if(dk IS NOT NULL)").alias("n_true_match"),
+                F.expr("count_if(dk IS NOT NULL AND NOT hit)").alias("n_missed"),
+            )
+            .crossJoin(dim.selectExpr("count(*) AS n_dim_keys"))
+            .selectExpr(
+                "n_probe", "n_dim_keys", "n_bloom_pass", "n_true_match", "n_missed",
+                "n_bloom_pass - n_true_match AS n_false_pos",
+                "round(cast(n_bloom_pass - n_true_match AS double)"
+                " / nullif(n_probe - n_true_match, 0), 6) AS fpr",
+            )
         )
-        pass_pred = " AND ".join(_bit_test(f"p{s}") for s in range(k_hashes))
-        stages = [
-            ("__blm_probe", "SELECT DISTINCT l_orderkey AS k FROM lineitem"),
-            (
-                "__blm_pass",
-                f"SELECT k FROM (SELECT k, {pos_proj} FROM __blm_probe) t"
-                f" WHERE {pass_pred}",
-            ),
-            (
-                "__blm_truth",
-                "SELECT p.k FROM __blm_probe p JOIN __blm_dim d ON p.k = d.k",
-            ),
-        ]
-        # CROSS JOINs of 1-row aggregates, not scalar subqueries: Spark
-        # executes each scalar subquery as its own job before the main
-        # query (5 driver round-trips over the caches); the cross-join
-        # form runs the same five tiny aggregates inside ONE action.
-        # Values unchanged (each aggregate is over the same relation).
-        final = """
-        SELECT n_probe, n_dim_keys, n_bloom_pass, n_true_match, n_missed,
-               n_bloom_pass - n_true_match AS n_false_pos,
-               round(cast(n_bloom_pass - n_true_match AS double)
-                     / nullif(n_probe - n_true_match, 0), 6) AS fpr
-        FROM       (SELECT count(*) AS n_probe      FROM __blm_probe)
-        CROSS JOIN (SELECT count(*) AS n_dim_keys   FROM __blm_dim)
-        CROSS JOIN (SELECT count(*) AS n_bloom_pass FROM __blm_pass)
-        CROSS JOIN (SELECT count(*) AS n_true_match FROM __blm_truth)
-        CROSS JOIN (SELECT count(*) AS n_missed     FROM __blm_truth t
-                    LEFT JOIN __blm_pass bp ON t.k = bp.k
-                    WHERE bp.k IS NULL)
-        """
-        return materialized_chain(spark, stages, final)
+        _capture("__final__", final)
+        return final.localCheckpoint(eager=True)
     finally:
         dim.unpersist()
-        spark.catalog.dropTempView("__blm_dim")
 
 
 # --- sketch_histogram_quantiles ---------------------------------------------
 
 
+def _bigint(x: int | None) -> str:
+    return "cast(NULL AS bigint)" if x is None else f"{x}L"
+
+
 def histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark side of the histogram-quantile sketch (oracle: the chained
-    form in ``inventory._histogram_quantiles_entry``). Everything
-    downstream of ``vals`` is distinct-value-sized; caching vals alone
-    cuts the lineitem scans from 11 to 1. ``bounds`` (1 row) and
-    ``cum`` (BINS rows) are staged too: the tail references them 3-4
-    times each and every unpinned reference re-aggregated the whole
-    vals cache. ``binned`` stays a plain view (row-local projection of
-    the cache). The exact-rank lookup is bin-local (see the template
-    comment in inventory.py) — no unpartitioned all-values window."""
+    form in ``inventory._histogram_quantiles_entry``). ``vals`` (one
+    lineitem shuffle to (value, count)) is the only persisted relation;
+    what the oracle derives from it that does not grow with scale comes
+    to the driver in two small collects:
+
+    1. bounds and ranks (3 rows): ``lo``, ``hi`` and
+       ``rk = cast(ceil(q * n) AS bigint)`` per q, computed in Spark;
+    2. the direct and per-shard (``v % 4``) histograms (<= 5 x 128
+       rows) in one grouping-sets aggregate, binned by the oracle's
+       integer arithmetic with ``lo``/``hi`` as literals.
+
+    The driver sums the shard rows per bin, counts the direct
+    ``(bin, bc)`` pairs missing from that merge (the oracle's
+    ``EXCEPT``, computed, so ``merged_hist_diff`` still proves
+    mergeability), runs the cumulative sum and picks the first bin with
+    ``cb >= rk`` per q — integer arithmetic throughout. One final
+    statement takes the picks as a ``VALUES`` literal, computes
+    ``est_cents`` by the oracle's double expression and the exact value
+    by the oracle's bin-local window over ``vals``, restricted to the
+    picked bins. An empty column has NULL bounds and an empty histogram,
+    so no picks; the final statement then returns the empty 6-column
+    frame."""
     from golang_db_query_engine_elasticsearch_indexer_spark.inventory import (  # noqa: PLC0415
         _HQ_BINS,
         _HQ_QS_VALUES,
-        _HQ_TAIL_SQL,
         _HQ_VALS_SQL,
-        _hq_stage_sqls,
     )
 
-    b_sql, bin_sql, cum_sql = _hq_stage_sqls(
-        "__hq_vals", "div", "__hq_bounds", "__hq_binned"
-    )
-    return materialized_chain(
-        spark,
-        [
-            ("__hq_vals", _HQ_VALS_SQL),
-            ("__hq_bounds", b_sql),
-            ("__hq_binned", bin_sql, False),
-            ("__hq_cum", cum_sql),
-        ],
-        "WITH "
-        + _HQ_TAIL_SQL.format(
-            binned="__hq_binned",
-            bounds="__hq_bounds",
-            cum="__hq_cum",
-            BINS=_HQ_BINS,
-            QS=_HQ_QS_VALUES,
-        ).lstrip(),
-    )
+    vals = spark.sql(_HQ_VALS_SQL).persist()
+    try:
+        tq = (
+            vals.selectExpr(
+                "min(v) AS lo", "max(v) AS hi", "cast(sum(c) AS bigint) AS n"
+            )
+            .crossJoin(spark.sql(f"SELECT q FROM {_HQ_QS_VALUES}"))
+            .selectExpr("q", "lo", "hi", "cast(ceil(q * n) AS bigint) AS rk")
+            .collect()
+        )
+        lo, hi = _bigint(tq[0]["lo"]), _bigint(tq[0]["hi"])
+        bin_of = f"((v - {lo}) * {_HQ_BINS}) div ({hi} - {lo} + 1)"
+        direct: dict[int, int] = {}
+        merged: dict[int, int] = {}
+        hist = (
+            vals.selectExpr(f"{bin_of} AS bin", "v % 4 AS sh", "c")
+            .groupingSets([["bin"], ["bin", "sh"]], "bin", "sh")
+            .agg(
+                F.grouping("sh").alias("whole"),
+                F.expr("cast(sum(c) AS bigint)").alias("bc"),
+            )
+        )
+        for r in hist.collect():
+            if r["whole"]:
+                direct[r["bin"]] = r["bc"]
+            else:
+                merged[r["bin"]] = merged.get(r["bin"], 0) + r["bc"]
+        n_diff = len(set(direct.items()) - set(merged.items()))
+        cum, total = [], 0
+        for b in sorted(direct):
+            total += direct[b]
+            cum.append((b, direct[b], total))
+        picks = []
+        for r in tq:
+            hit = next((c for c in cum if c[2] >= r["rk"]), None)
+            if hit is not None:
+                b, bc, cb = hit
+                picks.append(f"({r['q']!r}D, {r['rk']}L, {b}L, {bc}L, {cb}L)")
+        # No pick: one all-NULL row, whose bin matches no vals row, so
+        # the inner join below leaves the typed empty frame.
+        null_pick = "(cast(NULL AS double)" + ", cast(NULL AS bigint)" * 4 + ")"
+        pick = spark.sql(
+            f"SELECT * FROM VALUES {', '.join(picks) or null_pick}"
+            " AS t(q, rk, bin, bc, cb)"
+        )
+        final = (
+            vals.selectExpr(f"{bin_of} AS bin", "v", "c")
+            .join(pick, "bin")
+            .selectExpr(
+                "q",
+                "rk",
+                f"{lo} + ((bin + (rk - (cb - bc)) * cast(1 AS double) / bc)"
+                f" * ({hi} - {lo} + 1)) / cast({_HQ_BINS} AS double) AS est_cents",
+                "v",
+                "(cb - bc) + cast(sum(c) OVER (PARTITION BY q ORDER BY v"
+                " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS bigint) AS cv",
+            )
+            .where("cv >= rk")
+            .groupBy("q", "rk", "est_cents")
+            .agg(F.min("v").alias("exact_cents"))
+            .selectExpr(
+                "q",
+                "rk AS target_rank",
+                "round(est_cents / cast(100 AS double), 4) AS est_quantile",
+                "round(exact_cents / cast(100 AS double), 4) AS exact_quantile",
+                "round(abs(est_cents - exact_cents) / exact_cents, 6) AS rel_err",
+                f"{n_diff}L AS merged_hist_diff",
+            )
+            .orderBy("q")
+        )
+        _capture("__final__", final)
+        return final.localCheckpoint(eager=True)
+    finally:
+        vals.unpersist()
 
 
 # --- events_stickiness ------------------------------------------------------

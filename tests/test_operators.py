@@ -1563,6 +1563,140 @@ def test_bloom_prefilter_contract(spark, tables, sf_dir):
     assert row.n_true_match == truth
 
 
+_DRIVER_SIDE_KERNELS = ("sketch_histogram_quantiles", "join_bloom_prefilter")
+
+
+def _edge_lineitem_orders(case: str, src: str):
+    """(lineitem, orders) Arrow tables of one edge case, cut from the
+    fixture files so every column and type is the fixture's."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    li = pq.read_table(f"{src}/lineitem.parquet")
+    orders = pq.read_table(f"{src}/orders.parquet")
+    price = li.schema.get_field_index("l_extendedprice")
+    if case == "one_price":  # lo == hi: every value lands in bin 0
+        li = li.set_column(price, "l_extendedprice", pa.array([1234.56] * li.num_rows))
+    elif case == "rank_on_bin_edge":
+        # n = 100: bins 0 / 63 / 127 hold 50 / 40 / 10 rows, so the
+        # ranks ceil(0.5 n) = 50 and ceil(0.9 n) = 90 equal cb exactly
+        li = li.slice(0, 100)
+        li = li.set_column(
+            price, "l_extendedprice", pa.array([100.0] * 50 + [150.0] * 40 + [200.0] * 10)
+        )
+    elif case == "empty_lineitem":
+        li = li.slice(0, 0)
+    elif case == "no_dim_key":
+        orders = orders.filter(pc.less_equal(orders["o_totalprice"], 400000.0))
+    return li, orders
+
+
+@pytest.mark.parametrize(
+    "case", ["one_price", "rank_on_bin_edge", "empty_lineitem", "no_dim_key"]
+)
+def test_driver_side_kernels_match_oracle_on_edge_cases(spark, tables, sf_dir, tmp_path, case):
+    """The histogram and Bloom kernels fold their fixed-size
+    intermediates on the driver; these sources reach each driver branch
+    (lo == hi, a rank equal to a bin's cumulative count, NULL bounds of
+    an empty column, an empty dim side). Both must equal their
+    registered oracle run by DuckDB over the same files. The source is
+    bound on a child session."""
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as entrymod
+    from golang_db_query_engine_elasticsearch_indexer_spark.oracle import (
+        compare,
+        duckdb_connection,
+    )
+
+    li, orders = _edge_lineitem_orders(case, sf_dir)
+    pq.write_table(li, tmp_path / "lineitem.parquet")
+    pq.write_table(orders, tmp_path / "orders.parquet")
+    child = spark.newSession()
+    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
+    con = duckdb_connection(str(tmp_path))
+    try:
+        for name in _DRIVER_SIDE_KERNELS:
+            ok, diag = compare(qs[name](child, str(tmp_path)), con, oracles[name])
+            assert ok, f"{case} {name}: {diag}"
+        hq = con.sql(oracles["sketch_histogram_quantiles"]).fetchall()
+        blm = con.sql(oracles["join_bloom_prefilter"]).fetchall()
+    finally:
+        con.close()
+    if case == "rank_on_bin_edge":
+        assert [(r[0], r[1], r[3]) for r in hq] == [
+            (0.5, 50, 100.0), (0.9, 90, 150.0), (0.99, 99, 200.0)
+        ]
+    if case == "empty_lineitem":
+        assert hq == [] and blm[0][0] == 0
+    if case == "no_dim_key":
+        assert blm[0][1] == 0 and blm[0][2] == 0
+
+
+def test_driver_side_kernels_concurrent_on_one_session(spark, tables, sf_dir, duck):
+    """Both kernels at once from two threads on one session, each
+    kernel twice per thread: the kernels register no fixed-name view,
+    so neither thread can read or drop the other's intermediates. Every
+    result equals its oracle."""
+    import threading
+
+    import __spark_entry__ as entrymod
+    from golang_db_query_engine_elasticsearch_indexer_spark.oracle import compare
+
+    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
+    start = threading.Barrier(2)
+    results: list = []
+    errors: list = []
+
+    def worker(order):
+        try:
+            start.wait(timeout=60)
+            for name in order * 2:
+                results.append((name, qs[name](spark, sf_dir)))
+        except Exception as e:  # noqa: BLE001 — re-raised below
+            errors.append(e)
+
+    threads = [
+        threading.Thread(target=worker, args=(order,))
+        for order in (_DRIVER_SIDE_KERNELS, _DRIVER_SIDE_KERNELS[::-1])
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert len(results) == 8
+    for name, df in results:
+        ok, diag = compare(df, duck, oracles[name])
+        assert ok, f"{name}: {diag}"
+
+
+# measured at sf0.001 on the test session: 14 and 11 jobs (33 and 25
+# when each ran a chain of persisted views); the bound is the count + 2,
+# since AQE can move a count by one or two
+_MAX_JOBS = {"sketch_histogram_quantiles": 16, "join_bloom_prefilter": 13}
+
+
+@pytest.mark.parametrize("name", _DRIVER_SIDE_KERNELS)
+def test_driver_side_kernel_job_count(spark, tables, sf_dir, name):
+    """One warm call of each kernel, result collected, runs at most
+    ``_MAX_JOBS[name]`` Spark jobs."""
+    import __spark_entry__ as entrymod
+
+    fn = entrymod.queries()[name]
+    fn(spark, sf_dir).collect()  # warm
+    sc = spark.sparkContext
+    group = f"job-count-{name}"
+    sc.setJobGroup(group, group)
+    try:
+        fn(spark, sf_dir).collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= _MAX_JOBS[name]
+
+
 def test_regression_trend_identities(spark, tables, sf_dir):
     """Regression aggregates must satisfy their algebraic identities:
     r2 = corr^2 (to rounding), r2 in [0,1], one fit per priority over

@@ -14,12 +14,14 @@ Modes (VERDICT r13 ask #6 — close the plan-evidence gaps):
                runtime artifacts a static explain cannot show —
                ReusedExchange/AQEShuffleRead nodes, runtime join
                rewrites. Use for stage-reuse claims.
-  --internals  additionally capture the INTERNAL stage plans of
-               materialized_chain kernels (histogram/bloom/...): the
-               eager localCheckpoint hides the heavy stages from the
-               returned frame's explain, so the hook in
-               operators.materialized records each staged statement's
-               plan as it runs.
+  --internals  additionally capture the INTERNAL plans of the
+               kernels in operators.materialized: each stage and the
+               final statement of materialized_chain kernels
+               (stickiness/revenue concentration/curation report), the
+               final statement of histogram/bloom (and bloom's word
+               aggregate). The eager localCheckpoint hides them from
+               the returned frame's explain, so the hook in
+               operators.materialized records each plan as it runs.
 
 Imperative operators (those that run jobs inside fn and return a frozen
 result, e.g. localCheckpoint-based kernels) still produce a plan — for
