@@ -54,6 +54,7 @@ from golang_db_query_engine_elasticsearch_indexer_spark.functions import (
     DUCK_TOKENS,
     TOKENS,
 )
+from golang_db_query_engine_elasticsearch_indexer_spark.operators.materialized import bound
 
 PAGERANK_DAMPING = 0.85
 PAGERANK_ITERS = 5
@@ -616,25 +617,19 @@ def copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = spark.sql(
         "WITH " + _TRIANGLE_EDGES_SPARK.strip() + " SELECT p1, p2 FROM edges"
     ).persist()
-    edges.createOrReplaceTempView("__tri_edges")
-    deg = spark.sql(_TRI_DEG_SQL.format(edges="__tri_edges")).persist()
-    deg.createOrReplaceTempView("__tri_deg")
-    oriented = spark.sql(
-        _TRI_ORIENTED_SQL.format(edges="__tri_edges", deg="__tri_deg")
-    ).persist()
-    oriented.createOrReplaceTempView("__tri_oriented")
+    held = [edges]
     try:
-        row = spark.sql(
-            _TRI_FINAL_SQL.format(
-                edges="__tri_edges", deg="__tri_deg", oriented="__tri_oriented"
-            )
-        ).collect()[0]
+        with bound(spark, edges=edges) as v:
+            deg = spark.sql(_TRI_DEG_SQL.format(**v)).persist()
+        held.append(deg)
+        with bound(spark, edges=edges, deg=deg) as v:
+            oriented = spark.sql(_TRI_ORIENTED_SQL.format(**v)).persist()
+        held.append(oriented)
+        with bound(spark, edges=edges, deg=deg, oriented=oriented) as v:
+            row = spark.sql(_TRI_FINAL_SQL.format(**v)).collect()[0]
     finally:
-        oriented.unpersist()
-        deg.unpersist()
-        edges.unpersist()
-        for v in ("__tri_oriented", "__tri_deg", "__tri_edges"):
-            spark.catalog.dropTempView(v)
+        for df in held:
+            df.unpersist()
     return spark.createDataFrame(
         [tuple(row)],
         "n_nodes bigint, n_edges bigint, n_wedges bigint,"

@@ -1,46 +1,39 @@
-"""Entries whose Spark form materializes shared intermediates.
+"""Entries whose Spark form materializes shared intermediates, and the
+one way the engine binds a DataFrame into SQL text.
 
 Spark INLINES multiply-referenced CTEs into independent subplans — a
 WITH-clause relation consumed N times becomes N copies of its whole
 subtree, and chains of such references multiply (measured: 63 scans
-for the 6-round BPE chain, 18 for the Bloom audit, 18 for the triangle
-census). DuckDB materializes each CTE once, so the chained-CTE text
-stays correct AND efficient there — which is exactly what the oracle
-needs. The Spark implementations here persist each shared relation
-once and freeze the (small) result with an eager ``localCheckpoint``
-before releasing it — the ``dedup.components`` lineage discipline
-applied to the CTE-inlining pitfall. Values are unchanged; only the
+for the 6-round BPE chain, 18 for the triangle census). DuckDB
+materializes each CTE once, so the chained-CTE text stays correct AND
+efficient there — which is exactly what the oracle needs. The Spark
+implementations persist each shared relation once, compose the rest
+of the statement on it, and freeze the (small) result with an eager
+``localCheckpoint`` before releasing it. Values are unchanged; only the
 physical plan differs, which the registry differential proves.
 
-Two shapes:
-
-- ``materialized_chain`` (stickiness, revenue concentration,
-  ``pipeline``) registers each stage as a temp view and runs the
-  oracle's SQL tail against the caches.
-- ``histogram_quantiles`` and ``bloom_prefilter`` persist ONE relation
-  and bring every intermediate that does not grow with scale (bounds,
-  the 128-bin histograms, the 1,024 bitmap words) to the driver, which
-  writes it back into the final statement as literals. Each runs a few
-  statements instead of a chain whose tail AQE splits into ~30 jobs,
-  and composes them on the persisted DataFrame, with no view: a
-  fixed-name view collides between concurrent calls on one session,
-  and dropping a view whose plan is the persisted relation's (as the
-  ``spark.sql`` keyword formatter does when ``sql()`` returns)
-  uncaches it.
+Kernels that compose SQL text over a DataFrame name it through
+:func:`bound`, which gives every call its own view names. A fixed view
+name collides between concurrent calls on one session, and
+``spark.catalog.dropTempView`` uncaches every cached plan equal to the
+view's, so dropping the view of a persisted frame evicts it.
 """
 
 from __future__ import annotations
+
+import uuid
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 #: Observability hook for plan capture (tools/capture_plans.py
-#: --internals): when set to a list, materialized_chain appends
-#: ``(stage_name, formatted_plan)`` for every stage it runs plus the
-#: final statement (the histogram and Bloom kernels append their final
-#: statement, and Bloom its word aggregate) — the INTERNAL plans an
-#: eager localCheckpoint hides from the returned frame's explain. Never
-#: set in production paths.
+#: --internals): when set to a list, the kernels here (and the curation
+#: report) append ``(stage_name, formatted_plan)`` for their persisted
+#: stage and final statement (Bloom also its word aggregate) — the
+#: INTERNAL plans an eager localCheckpoint hides from the returned
+#: frame's explain. Never set in production paths.
 PLAN_CAPTURE: list | None = None
 
 
@@ -56,41 +49,28 @@ def _capture(name: str, df: DataFrame) -> None:
     PLAN_CAPTURE.append((name, plan))
 
 
-def materialized_chain(
-    spark: SparkSession,
-    stages: list[tuple],
-    final_sql: str,
-) -> DataFrame:
-    """Register each named stage as a temp view (in order — later
-    stages may reference earlier ones), evaluate ``final_sql`` against
-    them, freeze the result with an eager localCheckpoint, and release
-    every cache and view before returning.
+@contextmanager
+def bound(spark: SparkSession, **frames: DataFrame) -> Iterator[dict[str, str]]:
+    """Register each frame as a temp view under a name unique to this
+    call and yield ``{key: view_name}`` for SQL composed in the block::
 
-    Each stage is ``(name, sql)`` or ``(name, sql, persist)``: persist
-    defaults True and should be False for stages consumed exactly once
-    — a single-reference view inlines without duplication, and NOT
-    paying the cache materialization for it measurably matters at
-    local scale (the Bloom audit's position unions are the case in
-    point)."""
-    held: list[DataFrame] = []
+        with bound(spark, codes=index.codes) as v:
+            out = spark.sql(f"SELECT ... FROM {v['codes']}")
+
+    ``spark.sql`` analyzes eagerly, so a frame built in the block keeps
+    its plan after the block ends. On exit the names leave the session
+    catalog only; the cache is untouched, so a persisted frame stays
+    cached for the caller."""
+    tag = uuid.uuid4().hex[:12]
+    names = {key: f"__{key}_{tag}" for key in frames}
     try:
-        for stage in stages:
-            name, sql = stage[0], stage[1]
-            persist = stage[2] if len(stage) > 2 else True
-            df = spark.sql(sql)
-            _capture(name, df)
-            if persist:
-                df = df.persist()
-                held.append(df)
-            df.createOrReplaceTempView(name)
-        final = spark.sql(final_sql)
-        _capture("__final__", final)
-        return final.localCheckpoint(eager=True)
+        for key, df in frames.items():
+            df.createOrReplaceTempView(names[key])
+        yield names
     finally:
-        for df in held:
-            df.unpersist()
-        for stage in stages:
-            spark.catalog.dropTempView(stage[0])
+        catalog = spark._jsparkSession.sessionState().catalog()
+        for name in names.values():
+            catalog.dropTempView(name)
 
 
 # --- join_bloom_prefilter ---------------------------------------------------
@@ -316,37 +296,36 @@ def stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     day-contribution explode, and the day bounds were scalar
     subqueries over raw events — 8 fact-table scans inlined. Staged:
     events is scanned ONCE (du), bounds derive from the du cache."""
-    stages = [
-        (
-            "__stk_du",
-            "SELECT DISTINCT cast(ts AS date) AS d, user_id FROM events",
-        ),
-        (
-            "__stk_bounds",
-            "SELECT min(d) AS lo, max(d) AS hi FROM __stk_du",
-        ),
-    ]
-    final = """
-    WITH dau AS (
-      SELECT d, count(DISTINCT user_id) AS dau FROM __stk_du GROUP BY d
-    ),
-    contrib AS (
-      SELECT explode(sequence(d, date_add(d, 6))) AS wd, user_id
-      FROM __stk_du
-    ),
-    wau AS (
-      SELECT wd AS d, count(DISTINCT user_id) AS wau
-      FROM contrib
-      WHERE wd <= (SELECT hi FROM __stk_bounds)
-      GROUP BY wd
-    )
-    SELECT cast(dau.d AS string) AS day, dau.dau, wau.wau,
-           round(dau.dau * cast(1 AS double) / wau.wau, 4) AS stickiness
-    FROM dau JOIN wau ON dau.d = wau.d
-    WHERE dau.d >= (SELECT date_add(lo, 6) FROM __stk_bounds)
-    ORDER BY day
-    """
-    return materialized_chain(spark, stages, final)
+    du = spark.sql("SELECT DISTINCT cast(ts AS date) AS d, user_id FROM events")
+    _capture("__stk_du", du)
+    du = du.persist()
+    try:
+        with bound(spark, du=du) as v:
+            final = spark.sql(f"""
+            WITH bounds AS (SELECT min(d) AS lo, max(d) AS hi FROM {v['du']}),
+            dau AS (
+              SELECT d, count(DISTINCT user_id) AS dau FROM {v['du']} GROUP BY d
+            ),
+            contrib AS (
+              SELECT explode(sequence(d, date_add(d, 6))) AS wd, user_id
+              FROM {v['du']}
+            ),
+            wau AS (
+              SELECT wd AS d, count(DISTINCT user_id) AS wau
+              FROM contrib
+              WHERE wd <= (SELECT hi FROM bounds)
+              GROUP BY wd
+            )
+            SELECT cast(dau.d AS string) AS day, dau.dau, wau.wau,
+                   round(dau.dau * cast(1 AS double) / wau.wau, 4) AS stickiness
+            FROM dau JOIN wau ON dau.d = wau.d
+            WHERE dau.d >= (SELECT date_add(lo, 6) FROM bounds)
+            ORDER BY day
+            """)
+        _capture("__final__", final)
+        return final.localCheckpoint(eager=True)
+    finally:
+        du.unpersist()
 
 
 # --- orders_revenue_concentration -------------------------------------------
@@ -358,26 +337,28 @@ def revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     3-table join consumed twice (total + shares) — inlined, that is
     six fact/dim scans; staged, the rollup (#nations rows) computes
     once."""
-    stages = [
-        (
-            "__hhi_nrev",
-            """
-            SELECT n.n_name AS nation, round(sum(o.o_totalprice), 2) AS revenue
-            FROM orders o
-            JOIN customer c ON o.o_custkey = c.c_custkey
-            JOIN nation n ON c.c_nationkey = n.n_nationkey
-            GROUP BY n.n_name
-            """,
-        ),
-    ]
-    final = """
-    WITH tot AS (SELECT sum(revenue) AS total FROM __hhi_nrev)
-    SELECT cast(count(*) AS bigint) AS n_nations,
-           round(sum(power(revenue / total, 2)) * 10000, 2) AS hhi,
-           round(max(revenue / total), 4) AS top_share
-    FROM __hhi_nrev CROSS JOIN tot
-    """
-    return materialized_chain(spark, stages, final)
+    nrev = spark.sql("""
+        SELECT n.n_name AS nation, round(sum(o.o_totalprice), 2) AS revenue
+        FROM orders o
+        JOIN customer c ON o.o_custkey = c.c_custkey
+        JOIN nation n ON c.c_nationkey = n.n_nationkey
+        GROUP BY n.n_name
+        """)
+    _capture("__hhi_nrev", nrev)
+    nrev = nrev.persist()
+    try:
+        with bound(spark, nrev=nrev) as v:
+            final = spark.sql(f"""
+            WITH tot AS (SELECT sum(revenue) AS total FROM {v['nrev']})
+            SELECT cast(count(*) AS bigint) AS n_nations,
+                   round(sum(power(revenue / total, 2)) * 10000, 2) AS hhi,
+                   round(max(revenue / total), 4) AS top_share
+            FROM {v['nrev']} CROSS JOIN tot
+            """)
+        _capture("__final__", final)
+        return final.localCheckpoint(eager=True)
+    finally:
+        nrev.unpersist()
 
 
 def registry() -> dict[str, dict]:

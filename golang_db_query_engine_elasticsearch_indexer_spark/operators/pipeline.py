@@ -23,6 +23,10 @@ from golang_db_query_engine_elasticsearch_indexer_spark.functions import (
     array_lit,
     list_lit,
 )
+from golang_db_query_engine_elasticsearch_indexer_spark.operators.materialized import (
+    _capture,
+    bound,
+)
 from golang_db_query_engine_elasticsearch_indexer_spark.operators.text import (
     LANG_STOPWORDS,
 )
@@ -320,10 +324,6 @@ def curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate. No per-stage re-scans — at 100 TB the manifest costs the
     same as the pipeline's own dedup stage.
     """
-    from golang_db_query_engine_elasticsearch_indexer_spark.operators.materialized import (  # noqa: PLC0415
-        materialized_chain,
-    )
-
     en = array_lit(LANG_STOPWORDS["en"])
     agg_sql = (
         _report_agg_sql("sha2(text, 256)")
@@ -334,9 +334,16 @@ def curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .replace("{CPT}", f"length(text) / size({TOKENS})")
     )
-    return materialized_chain(
-        spark, [("__cur_agg", agg_sql)], _report_union_sql("__cur_agg")
-    )
+    agg = spark.sql(agg_sql)
+    _capture("__cur_agg", agg)
+    agg = agg.persist()
+    try:
+        with bound(spark, agg=agg) as v:
+            final = spark.sql(_report_union_sql(v["agg"]))
+        _capture("__final__", final)
+        return final.localCheckpoint(eager=True)
+    finally:
+        agg.unpersist()
 
 
 def _duck_report_oracle() -> str:

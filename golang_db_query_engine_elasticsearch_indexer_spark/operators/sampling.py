@@ -25,6 +25,7 @@ from golang_db_query_engine_elasticsearch_indexer_spark.functions import (
     TOKENS,
     hash16 as _hash16,
 )
+from golang_db_query_engine_elasticsearch_indexer_spark.operators.materialized import bound
 
 # md5-hex-prefix thresholds: first two hex chars are uniform over 0..255,
 # so '80' ≈ 50%, '40' ≈ 25%, '1a' ≈ ~10.2%. Shared by Spark and DuckDB —
@@ -450,14 +451,8 @@ def dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = spark.sql(
         f"WITH {_dsir_toks_cte(token_select)}\n{_dsir_counts_body()}"
     ).localCheckpoint(eager=True)
-    counts.createOrReplaceTempView("__dsir_counts")
-    try:
-        # spark.sql analyzes eagerly, so the returned frame's plan no
-        # longer needs the view; dropping it un-pins the checkpoint
-        # blocks from the session catalog (ADVICE r13).
-        return spark.sql(_dsir_sql(token_select, counts_rel="__dsir_counts"))
-    finally:
-        spark.catalog.dropTempView("__dsir_counts")
+    with bound(spark, counts=counts) as v:
+        return spark.sql(_dsir_sql(token_select, counts_rel=v["counts"]))
 
 
 DSIR_ORACLE = _dsir_sql(

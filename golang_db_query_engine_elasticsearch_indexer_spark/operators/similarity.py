@@ -33,6 +33,7 @@ from golang_db_query_engine_elasticsearch_indexer_spark.functions import (
     TOKENS,
     hash16,
 )
+from golang_db_query_engine_elasticsearch_indexer_spark.operators.materialized import bound
 
 TOP_K = 5
 N_PROBES = 5  # probe set: vec_id < N_PROBES
@@ -578,17 +579,13 @@ def _kmeans_cents(
         cents = [
             (i + 1, list(r["c"]), _l2(r["c"])) for i, r in enumerate(seed_rows)
         ]
-        samp.createOrReplaceTempView("__km_samp")
-        for _ in range(iters):
-            # One SQL per iteration (see _lloyd_iter_sql): k * N_DIM
-            # result rows — constant-size.
-            by_cid, _unused = _collect_lloyd_stats(spark, "__km_samp", cents=cents)
-            cents = _cents_from_stats(by_cid)
+        with bound(spark, samp=samp) as v:
+            for _ in range(iters):
+                # One SQL per iteration (see _lloyd_iter_sql): k * N_DIM
+                # result rows — constant-size.
+                by_cid, _unused = _collect_lloyd_stats(spark, v["samp"], cents=cents)
+                cents = _cents_from_stats(by_cid)
     finally:
-        # Per-iteration statements collect eagerly, so nothing outlives
-        # the loop that needs the view; leaving it registered leaks a
-        # fixed-name view into the session catalog (ADVICE r13).
-        spark.catalog.dropTempView("__km_samp")
         if owned:
             samp.unpersist()
     return cents
@@ -880,20 +877,19 @@ def pq_train(
             [(i + 1, list(r[f"c{s}"]), _l2(r[f"c{s}"])) for i, r in enumerate(seed_rows)]
             for s in range(PQ_M)
         ]
-        samp.createOrReplaceTempView("__pq_samp")
-        for _ in range(KMEANS_ITERS):
-            # Per-subspace nearest-centroid cid with the same scored-
-            # struct argmax (round-6 scores, lowest-cid tiebreak) the
-            # single-subspace trainer applies, then one explosion to
-            # (s, cid, pos, val) and ONE aggregation for all subspaces,
-            # all in ONE SQL statement per iteration (_lloyd_iter_sql):
-            # PQ_M * PQ_K * PQ_SUB result rows — constant-size.
-            _unused, by_s = _collect_lloyd_stats(
-                spark, "__pq_samp", cbs=cbs, metric=metric
-            )
-            cbs = [_cents_from_stats(by_cid) for by_cid in by_s]
+        with bound(spark, samp=samp) as v:
+            for _ in range(KMEANS_ITERS):
+                # Per-subspace nearest-centroid cid with the same scored-
+                # struct argmax (round-6 scores, lowest-cid tiebreak) the
+                # single-subspace trainer applies, then one explosion to
+                # (s, cid, pos, val) and ONE aggregation for all subspaces,
+                # all in ONE SQL statement per iteration (_lloyd_iter_sql):
+                # PQ_M * PQ_K * PQ_SUB result rows — constant-size.
+                _unused, by_s = _collect_lloyd_stats(
+                    spark, v["samp"], cbs=cbs, metric=metric
+                )
+                cbs = [_cents_from_stats(by_cid) for by_cid in by_s]
     finally:
-        spark.catalog.dropTempView("__pq_samp")
         if owned:
             samp.unpersist()
     return cbs
@@ -934,8 +930,7 @@ def _fused_ivfpq_train(spark: SparkSession, samp: DataFrame):
         ]
         for s in range(PQ_M)
     ]
-    samp.createOrReplaceTempView("__ivfpq_samp")
-    try:
+    with bound(spark, samp=samp) as v:
         for _ in range(KMEANS_ITERS):
             # One SQL statement per iteration (_lloyd_iter_sql): the 9
             # argmaxes (coarse + 8 subspaces) in one projection, one
@@ -943,12 +938,10 @@ def _fused_ivfpq_train(spark: SparkSession, samp: DataFrame):
             # KMEANS_K * N_DIM + PQ_M * PQ_K * PQ_SUB result rows —
             # constant-size.
             coarse_by_cid, by_s = _collect_lloyd_stats(
-                spark, "__ivfpq_samp", cents=cents, cbs=cbs
+                spark, v["samp"], cents=cents, cbs=cbs
             )
             cents = _cents_from_stats(coarse_by_cid)
             cbs = [_cents_from_stats(by_cid) for by_cid in by_s]
-    finally:
-        spark.catalog.dropTempView("__ivfpq_samp")
     return cents, cbs
 
 
@@ -1013,20 +1006,14 @@ def _pq_encode(
     )
     nsubs = ", ".join(f"{NORM.format(a=f'sub{s}')} AS nsub{s}" for s in range(PQ_M))
     poss = ", ".join(f"pos{s}" for s in range(PQ_M))
-    df.createOrReplaceTempView("__pq_encode_src")
-    try:
-        # spark.sql analyzes eagerly — the returned frame's plan is
-        # already bound, so the view can be dropped immediately
-        # (ADVICE r13: fixed-name views must not outlive the call).
-        return df.sparkSession.sql(
+    spark = df.sparkSession
+    with bound(spark, src=df) as v:
+        return spark.sql(
             f"SELECT vec_id, {extra_cols}{poss}, sqrt({rn2}) AS rnorm\n"
             f"FROM (SELECT *, {', '.join(pos_exprs)}\n"
             f"  FROM (SELECT *, {nsubs}\n"
-            f"    FROM (SELECT vec_id, {extra_cols}{subs}"
-            " FROM __pq_encode_src)))"
+            f"    FROM (SELECT vec_id, {extra_cols}{subs} FROM {v['src']})))"
         )
-    finally:
-        df.sparkSession.catalog.dropTempView("__pq_encode_src")
 
 
 def _pq_probe_luts(spark: SparkSession, cb_exprs: list[str]) -> DataFrame:
@@ -1192,11 +1179,8 @@ def pq_search(spark: SparkSession, sf_dir: str, index: PQIndex) -> DataFrame:
     jiggle inside it). Both stages rank on values rounded to 6 dp with
     vec_id tiebreaks, so the DuckDB oracle replays rank-for-rank.
     """
-    index.codes.createOrReplaceTempView("__pq_codes")
-    try:
-        return spark.sql(_adc_rerank_sql("__pq_codes", index.cb_exprs))
-    finally:
-        spark.catalog.dropTempView("__pq_codes")
+    with bound(spark, codes=index.codes) as v:
+        return spark.sql(_adc_rerank_sql(v["codes"], index.cb_exprs))
 
 
 def _adc_rerank_sql(
@@ -1628,16 +1612,13 @@ def ivfpq_search(
     against the broadcast (probe, cell) relation; LUT scoring, shortlist
     and re-rank are identical to :func:`pq_search` (one SQL statement —
     see :func:`_adc_rerank_sql`)."""
-    index.codes.createOrReplaceTempView("__ivfpq_codes")
-    try:
+    with bound(spark, codes=index.codes) as v:
         return spark.sql(
             _adc_rerank_sql(
-                "__ivfpq_codes", index.cb_exprs,
+                v["codes"], index.cb_exprs,
                 cells_expr=index.cells_expr, nprobe=nprobe,
             )
         )
-    finally:
-        spark.catalog.dropTempView("__ivfpq_codes")
 
 
 def ivfpq_topk(
@@ -1810,16 +1791,12 @@ def ivfpq_residual_search(
     per-op analysis cost the raw-code searches shed in r13. The score
     arithmetic is mirrored term for term; collected-row equality
     against the chained form is pinned in tests/test_operators.py."""
-    index.codes.createOrReplaceTempView("__ivfpq_res_codes")
-    try:
+    with bound(spark, codes=index.codes) as v:
         return spark.sql(
             _adc_rerank_sql(
-                "__ivfpq_res_codes", index.cb_exprs,
-                nprobe=nprobe, residual=index,
+                v["codes"], index.cb_exprs, nprobe=nprobe, residual=index
             )
         )
-    finally:
-        spark.catalog.dropTempView("__ivfpq_res_codes")
 
 
 def ivfpq_residual_index_save(index: IVFPQResidualIndex, path: str) -> None:

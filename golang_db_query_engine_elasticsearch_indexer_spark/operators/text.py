@@ -21,6 +21,7 @@ from golang_db_query_engine_elasticsearch_indexer_spark.functions import (
     array_lit as _array_lit,
     list_lit as _list_lit,
 )
+from golang_db_query_engine_elasticsearch_indexer_spark.operators.materialized import bound
 
 # Stopword sets for the language-ID heuristic (fixed, tiny, broadcast as
 # literals inside the expression — no side data needed).
@@ -1581,16 +1582,14 @@ def bpe_merge_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
     out: list[tuple] = []
     try:
         for r in range(1, BPE_MERGES + 1):
-            cur.createOrReplaceTempView("__bpe_cur")
-            best = (
-                spark.sql(
+            with bound(spark, cur=cur) as v:
+                best = spark.sql(
                     "SELECT lsym, rsym, pattern, repl,"
                     " cast(sum(cnt) AS BIGINT) AS freq FROM ("
-                    + _BPE_PAIRS_SPARK.format(prev="__bpe_cur")
+                    + _BPE_PAIRS_SPARK.format(prev=v["cur"])
                     + ") GROUP BY lsym, rsym, pattern, repl"
                     " ORDER BY freq DESC, pattern LIMIT 1"
-                )
-            ).collect()[0]
+                ).collect()[0]
             out.append(
                 (r, best.lsym, best.rsym, best.lsym + best.rsym, best.freq)
             )
@@ -1618,7 +1617,6 @@ def bpe_merge_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         for d in held:
             d.unpersist()
-        spark.catalog.dropTempView("__bpe_cur")
     return spark.createDataFrame(
         out, "merge_rank int, lsym string, rsym string, merged string, freq bigint"
     ).orderBy("merge_rank")

@@ -24,6 +24,19 @@ from typing import NamedTuple
 CHANGED: dict[str, int] = {
     "sketch_histogram_quantiles": 15,
     "join_bloom_prefilter": 15,
+    "ann_ivf_recall_eval": 15,
+    "ann_ivf_topk": 15,
+    "ann_ivfpq_topk": 15,
+    "ann_pq_from_artifact": 15,
+    "ann_pq_topk": 15,
+    "embedding_cluster_purity": 15,
+    "events_stickiness": 15,
+    "graph_copurchase_triangles": 15,
+    "orders_revenue_concentration": 15,
+    "pipeline_curation_report": 15,
+    "sample_dsir_importance": 15,
+    "stream_hll_daily_merged": 15,
+    "tokens_bpe_merge_learn": 15,
 }
 
 _ROOT = Path(__file__).resolve().parent.parent

@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
+from golang_db_query_engine_elasticsearch_indexer_spark.operators.materialized import bound
+
 
 def _stream_state_partitions() -> int:
     """Partition count for exchanges INSIDE a streaming query.
@@ -810,12 +812,10 @@ def hll_daily_merged(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("day", "bucket")
         .agg(F.max("m").alias("m"))
     )
-    tbl = _run_to_table(regs, "complete")
-    view = f"stream_hll_regs_{uuid.uuid4().hex[:8]}"
-    tbl.createOrReplaceTempView(view)
-    return spark.sql(
-        f"WITH regs AS (SELECT day, bucket, m FROM {view}),{HLL_DAILY_POST}"
-    )
+    with bound(spark, regs=_run_to_table(regs, "complete")) as v:
+        return spark.sql(
+            f"WITH regs AS (SELECT day, bucket, m FROM {v['regs']}),{HLL_DAILY_POST}"
+        )
 
 
 def registry() -> dict[str, dict]:

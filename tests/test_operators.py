@@ -372,6 +372,15 @@ def test_pq_topk_recall_with_rerank(spark, tables, sf_dir):
     assert recall >= 0.5
 
 
+def _assert_search_reads_cached_codes(spark, index, search) -> None:
+    """``index.codes`` is still in the cache manager after the searches,
+    and ``search``'s optimized plan reads it as an InMemoryRelation."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.lookupCachedData(index.codes._jdf).isDefined()
+    plan = search._jdf.queryExecution().optimizedPlan().toString()
+    assert "InMemoryRelation" in plan
+
+
 def test_pq_build_search_split_matches_selfcontained(spark, tables, sf_dir):
     """The 'build once, search many' path (pq_build -> pq_search over a
     persisted code table) must return exactly what the self-contained
@@ -395,9 +404,9 @@ def test_pq_build_search_split_matches_selfcontained(spark, tables, sf_dir):
         split = [tuple(r) for r in similarity.pq_search(spark, sf_dir, index).collect()]
         whole = [tuple(r) for r in similarity.pq_topk(spark, sf_dir).collect()]
         assert split == whole
-        # second search reuses the same persisted codes (no retraining)
-        again = [tuple(r) for r in similarity.pq_search(spark, sf_dir, index).collect()]
-        assert again == split
+        search = similarity.pq_search(spark, sf_dir, index)
+        assert [tuple(r) for r in search.collect()] == split
+        _assert_search_reads_cached_codes(spark, index, search)
     finally:
         index.release()
 
@@ -912,10 +921,30 @@ def test_ivfpq_build_search_split_matches_selfcontained(spark, tables, sf_dir):
         ]
         whole = [tuple(r) for r in similarity.ivfpq_topk(spark, sf_dir).collect()]
         assert split == whole
-        again = [
-            tuple(r) for r in similarity.ivfpq_search(spark, sf_dir, index).collect()
+        search = similarity.ivfpq_search(spark, sf_dir, index)
+        assert [tuple(r) for r in search.collect()] == split
+        _assert_search_reads_cached_codes(spark, index, search)
+    finally:
+        index.release()
+
+
+def test_ivfpq_residual_build_search_split_matches_selfcontained(spark, tables, sf_dir):
+    """The residual composite's 'build once, search many' path returns
+    exactly what the self-contained ivfpq_residual_topk returns, and
+    every search reads the code table the build persisted."""
+    index = similarity.ivfpq_residual_build(spark, sf_dir, persist=True)
+    try:
+        split = [
+            tuple(r)
+            for r in similarity.ivfpq_residual_search(spark, sf_dir, index).collect()
         ]
-        assert again == split
+        whole = [
+            tuple(r) for r in similarity.ivfpq_residual_topk(spark, sf_dir).collect()
+        ]
+        assert split == whole
+        search = similarity.ivfpq_residual_search(spark, sf_dir, index)
+        assert [tuple(r) for r in search.collect()] == split
+        _assert_search_reads_cached_codes(spark, index, search)
     finally:
         index.release()
 
@@ -1634,11 +1663,10 @@ def test_driver_side_kernels_match_oracle_on_edge_cases(spark, tables, sf_dir, t
         assert blm[0][1] == 0 and blm[0][2] == 0
 
 
-def test_driver_side_kernels_concurrent_on_one_session(spark, tables, sf_dir, duck):
-    """Both kernels at once from two threads on one session, each
-    kernel twice per thread: the kernels register no fixed-name view,
-    so neither thread can read or drop the other's intermediates. Every
-    result equals its oracle."""
+def _run_concurrently_on_one_session(spark, sf_dir, duck, kernels) -> None:
+    """Run ``kernels`` from two threads on one session (the second
+    thread in reverse order), each kernel twice per thread, and check
+    every result against its oracle."""
     import threading
 
     import __spark_entry__ as entrymod
@@ -1659,7 +1687,7 @@ def test_driver_side_kernels_concurrent_on_one_session(spark, tables, sf_dir, du
 
     threads = [
         threading.Thread(target=worker, args=(order,))
-        for order in (_DRIVER_SIDE_KERNELS, _DRIVER_SIDE_KERNELS[::-1])
+        for order in (kernels, kernels[::-1])
     ]
     for t in threads:
         t.start()
@@ -1667,10 +1695,33 @@ def test_driver_side_kernels_concurrent_on_one_session(spark, tables, sf_dir, du
         t.join(timeout=600)
     assert not any(t.is_alive() for t in threads)
     assert not errors, errors
-    assert len(results) == 8
+    assert len(results) == 4 * len(kernels)
     for name, df in results:
         ok, diag = compare(df, duck, oracles[name])
         assert ok, f"{name}: {diag}"
+
+
+def test_driver_side_kernels_concurrent_on_one_session(spark, tables, sf_dir, duck):
+    """Both kernels at once from two threads on one session: the
+    kernels register no view, so neither thread can read or drop the
+    other's intermediates."""
+    _run_concurrently_on_one_session(spark, sf_dir, duck, _DRIVER_SIDE_KERNELS)
+
+
+# kernels that compose SQL over a persisted stage bound under per-call
+# view names (operators.materialized.bound)
+_BOUND_VIEW_KERNELS = (
+    "graph_copurchase_triangles",
+    "events_stickiness",
+    "pipeline_curation_report",
+)
+
+
+def test_bound_view_kernels_concurrent_on_one_session(spark, tables, sf_dir, duck):
+    """Kernels that bind their stages into SQL text, from two threads
+    on one session: each call's view names are its own, so no thread
+    reads or drops another's stage."""
+    _run_concurrently_on_one_session(spark, sf_dir, duck, _BOUND_VIEW_KERNELS)
 
 
 # measured at sf0.001 on the test session: 14 and 11 jobs (33 and 25

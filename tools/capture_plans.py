@@ -15,9 +15,9 @@ Modes (VERDICT r13 ask #6 — close the plan-evidence gaps):
                ReusedExchange/AQEShuffleRead nodes, runtime join
                rewrites. Use for stage-reuse claims.
   --internals  additionally capture the INTERNAL plans of the
-               kernels in operators.materialized: each stage and the
-               final statement of materialized_chain kernels
-               (stickiness/revenue concentration/curation report), the
+               kernels in operators.materialized: the persisted stage
+               and the final statement of stickiness, revenue
+               concentration and the curation report, the
                final statement of histogram/bloom (and bloom's word
                aggregate). The eager localCheckpoint hides them from
                the returned frame's explain, so the hook in
