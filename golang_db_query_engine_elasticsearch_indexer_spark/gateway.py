@@ -116,23 +116,22 @@ def es_search_df(spark: SparkSession, index: str, body: dict) -> DataFrame:
     match_all (ES default)."""
     from golang_db_query_engine_elasticsearch_indexer_spark.operators.es_dsl import (  # noqa: PLC0415
         compile_search,
+        compile_union_search,
     )
 
     if index is None or body is None:
         raise ParamsNullError()
-    index = _search_relation(spark, index)
+    schemas = {t: spark.table(t).schema for t in _search_targets(spark, index)}
+    if len(schemas) > 1:
+        return spark.sql(compile_union_search(schemas, body, "spark"))
+    [(index, schema)] = schemas.items()
     # id tiebreak column: the relation's first column, the same
     # default every other index-addressed verb uses (the old fixed
     # "doc_id" default broke hit-returning searches over any table
-    # not named documents). Union views carry the synthetic never-NULL
-    # _uid instead — their first column is NULL for rows from targets
-    # lacking it, which would leave LIMIT engine-arbitrary and drop
-    # NULL-id rows from every slice.
-    if index.startswith("__indices_"):
-        id_field = "_uid"
-    else:
-        id_field = spark.table(index).columns[0]
-    return spark.sql(compile_search(index, body, "spark", id_field))
+    # not named documents)
+    return spark.sql(
+        compile_search(index, body, "spark", schema.names[0], schemas=schemas)
+    )
 
 
 def es_search(
@@ -192,12 +191,18 @@ def es_count(spark: SparkSession, index: str, body: dict | None = None) -> int:
     payload."""
     from golang_db_query_engine_elasticsearch_indexer_spark.operators.es_dsl import (  # noqa: PLC0415
         compile_count,
+        compile_union_search,
     )
 
     if index is None:
         raise ParamsNullError()
-    index = _search_relation(spark, index)
-    row = spark.sql(compile_count(index, body or {}, "spark")).collect()[0]
+    targets = _search_targets(spark, index)
+    if len(targets) > 1:
+        schemas = {t: spark.table(t).schema for t in targets}
+        sql = compile_union_search(schemas, body or {}, "spark", count=True)
+    else:
+        sql = compile_count(targets[0], body or {}, "spark")
+    row = spark.sql(sql).collect()[0]
     return int(row["count"])
 
 
@@ -218,21 +223,25 @@ def cat_indices_sql(tables: tuple[str, ...], dialect: str) -> str:
     return f"{branches}\nORDER BY {q} ASC"
 
 
-def cat_indices_df(spark: SparkSession) -> DataFrame:
-    """`GET /_cat/indices` as a lazy DataFrame: (index, docs_count)
-    for every registered fixture table present in the session catalog
-    — the read-only index inventory the reference's users check daily
-    beside _search/_count/_mapping. Catalog-driven (temp views the
-    engine's own operators register, e.g. BM25 artifacts, are not
-    indices and are excluded by the fixture-table intersection)."""
-    from golang_db_query_engine_elasticsearch_indexer_spark.session import (  # noqa: PLC0415
-        FIXTURE_TABLES,
+def _indices(spark: SparkSession) -> list[str]:
+    """The indices ``spark`` can address, sorted: the non-temporary
+    tables of its current database, minus the ``_raw_*`` tables behind
+    converted views (session._create_table). Temp views — the engine's
+    own intermediates, BM25 artifacts and the like — are not indices.
+    The one scope rule of `_cat/indices`, `_resolve/index` and `*`
+    index expressions."""
+    return sorted(
+        r.tableName for r in spark.sql("SHOW TABLES").collect()
+        if not r.isTemporary and not r.tableName.startswith("_raw_")
     )
 
-    present = tuple(
-        t for t in FIXTURE_TABLES if spark.catalog.tableExists(t)
-    )
-    return spark.sql(cat_indices_sql(present, "spark"))
+
+def cat_indices_df(spark: SparkSession) -> DataFrame:
+    """`GET /_cat/indices` as a lazy DataFrame: (index, docs_count)
+    for every index of the session (_indices) — the read-only index
+    inventory the reference's users check daily beside
+    _search/_count/_mapping."""
+    return spark.sql(cat_indices_sql(tuple(_indices(spark)), "spark"))
 
 
 def cat_indices(spark: SparkSession) -> list[dict]:
@@ -354,18 +363,12 @@ def _expand_index_expression(
     """An ES index expression — a comma list of names, aliases, and
     `*` wildcards (`GET /logs-*,metrics/_search`) — expanded to
     concrete tables, first-seen order, deduplicated. Wildcards match
-    registered fixture tables present in the live catalog (the
-    cat_indices/_resolve rule — engine-internal temp views are not
-    indices) AND alias names, whose targets expand in. A part that
-    resolves to nothing raises the typed 404 (the
-    allow_no_indices=false posture: a silent empty search hides
+    the session's indices (_indices) AND alias names, whose targets
+    expand in. A part that resolves to nothing raises the typed 404
+    (the allow_no_indices=false posture: a silent empty search hides
     typos; ES's lenient default is opt-in leniency this engine
     declines). Driver-side catalog work — no data touched."""
     import fnmatch  # noqa: PLC0415
-
-    from golang_db_query_engine_elasticsearch_indexer_spark.session import (  # noqa: PLC0415
-        FIXTURE_TABLES,
-    )
 
     out: list[str] = []
 
@@ -379,24 +382,8 @@ def _expand_index_expression(
                 f"es_dsl: empty index name in {expr!r}"
             )
         if "*" in part:
-            # wildcard scope: the fixture inventory PLUS any table
-            # published by a live registration (session.TABLE_COLUMNS)
-            # — a runtime-registered table was comma-addressable but
-            # invisible to '*' patterns, inconsistent with the
-            # compiler's own live-catalog overlay (ADVICE r12). Both
-            # re-check the live catalog; engine-internal temp views
-            # (never registered) stay excluded, the _resolve rule.
-            from golang_db_query_engine_elasticsearch_indexer_spark.session import (  # noqa: PLC0415
-                TABLE_COLUMNS,
-            )
-
-            scope = list(FIXTURE_TABLES) + sorted(
-                t for t in TABLE_COLUMNS if t not in FIXTURE_TABLES
-            )
             hits = [
-                t for t in scope
-                if fnmatch.fnmatchcase(t, part)
-                and spark.catalog.tableExists(t)
+                t for t in _indices(spark) if fnmatch.fnmatchcase(t, part)
             ]
             for a in sorted(_aliases(spark)):
                 if fnmatch.fnmatchcase(a, part):
@@ -415,46 +402,13 @@ def _expand_index_expression(
     return tuple(out)
 
 
-def _union_view(spark: SparkSession, targets: tuple[str, ...]) -> str:
-    """Materialize (metadata-only) a temp view over the ES
-    missing-column-as-NULL UNION ALL of the targets — the same union
-    the ES|QL multi-index FROM emits, plus the never-NULL ``_uid``
-    identity column (source name + an md5 over the branch's
-    cross-engine-stable columns, unique per distinct row — see
-    operators/esql.union_all_sql) that the search path uses as its
-    sort tiebreak / slice hash / pagination key (the union's FIRST
-    column is NULL for rows from targets lacking it, so it cannot be
-    the id). Named by a digest of
-    the target list; re-created on every resolution so it always
-    follows the live catalog. ``_uid`` rides along in `_source: true`
-    responses — the honest stand-in for the ES hit `_id`."""
-    import hashlib  # noqa: PLC0415
-
-    from golang_db_query_engine_elasticsearch_indexer_spark.operators.esql import (  # noqa: PLC0415
-        union_all_sql,
-    )
-
-    cols = {t: list(spark.table(t).columns) for t in targets}
-    view = "__indices_" + hashlib.md5(
-        ",".join(targets).encode()
-    ).hexdigest()[:12]
-    spark.sql(union_all_sql(cols, uid=True)).createOrReplaceTempView(view)
-    return view
-
-
-def _search_relation(spark: SparkSession, index: str) -> str:
-    """The table name a search-shaped verb should compile against:
-    concrete names and single-target aliases resolve as before; a
-    multi-target alias, a comma list, or a `*` wildcard expression
-    resolves through _expand_index_expression and compiles against
-    the UNION ALL view."""
+def _search_targets(spark: SparkSession, index: str) -> tuple[str, ...]:
+    """The tables a search-shaped verb reads: a concrete name or a
+    single-target alias gives one; a multi-target alias, a comma list
+    or a `*` wildcard expression gives each table it expands to."""
     if "," in index or "*" in index:
-        targets = _expand_index_expression(spark, index)
-    else:
-        targets = _alias_targets(spark, index)
-    if len(targets) == 1:
-        return targets[0]
-    return _union_view(spark, targets)
+        return _expand_index_expression(spark, index)
+    return _alias_targets(spark, index)
 
 
 def es_update_aliases(spark: SparkSession, body: dict) -> dict:
@@ -993,7 +947,10 @@ def es_scroll_page(
     body.pop("from", None)
     if after is not None:
         body["search_after"] = after
-    return spark.sql(compile_search(index, body, "spark", id_field))
+    schemas = {index: spark.table(index).schema}
+    return spark.sql(
+        compile_search(index, body, "spark", id_field, schemas=schemas)
+    )
 
 
 def es_scroll(
@@ -1580,19 +1537,9 @@ def es_resolve_index(spark: SparkSession, pattern: str) -> dict:
     Driver-side catalog work — no data touched."""
     import fnmatch  # noqa: PLC0415
 
-    from golang_db_query_engine_elasticsearch_indexer_spark.session import (  # noqa: PLC0415
-        FIXTURE_TABLES,
-    )
-
     if pattern is None or not str(pattern).strip():
         raise ParamsNullError()
-    # Intersect with the live session catalog (cat_indices_df's rule):
-    # the static FIXTURE_TABLES tuple alone would report indices the
-    # session never registered.
-    names = sorted(
-        t for t in FIXTURE_TABLES
-        if fnmatch.fnmatchcase(t, pattern) and spark.catalog.tableExists(t)
-    )
+    names = [t for t in _indices(spark) if fnmatch.fnmatchcase(t, pattern)]
     return {
         "indices": [
             {"name": n, "attributes": ["open"]} for n in names

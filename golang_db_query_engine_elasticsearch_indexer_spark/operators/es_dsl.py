@@ -88,6 +88,7 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 # The compiler is split along its natural seams (VERDICT r10 ask #9):
@@ -354,12 +355,24 @@ def _runtime_mappings_cte(index: str, rm: dict, dialect: str) -> str:
     )
 
 
+def _with_cte(cte: str, sql: str) -> str:
+    """``sql`` with ``cte`` (``name AS (...)``) first in its WITH list —
+    one top-level WITH, whether or not ``sql`` already has one."""
+    stripped = sql.lstrip()
+    if stripped.startswith("WITH "):
+        return f"WITH {cte},\n{stripped[len('WITH '):]}"
+    return f"WITH {cte}\n{sql}"
+
+
 def compile_search(
     index: str, body: dict, dialect: str, id_field: str = "doc_id",
     relations: dict | None = None,
+    schemas: dict[str, StructType] | None = None,
 ) -> str:
     """Compile a `_search` body (query context + _source/sort/size/
-    from) to one SQL statement over table ``index``."""
+    from) to one SQL statement over table ``index``. The `_source`
+    object form with excludes or wildcards reads ``index``'s columns
+    from ``schemas``."""
     if dialect not in ("spark", "duck"):
         raise ValueError(f"es_dsl: unknown dialect {dialect!r}")
     if "script_fields" in body:
@@ -400,14 +413,9 @@ def compile_search(
         rm = body["runtime_mappings"]
         rest = {k: v for k, v in body.items() if k != "runtime_mappings"}
         cte = _runtime_mappings_cte(index, rm, dialect)
-        inner = compile_search(
-            f"{index}_rt", rest, dialect, id_field, relations
-        )
-        stripped = inner.lstrip()
-        if stripped.startswith("WITH "):
-            # merge into one top-level WITH list
-            return f"WITH {cte},\n{stripped[len('WITH '):]}"
-        return f"WITH {cte}\n{inner}"
+        return _with_cte(cte, compile_search(
+            f"{index}_rt", rest, dialect, id_field, relations, schemas
+        ))
     if "track_total_hits" in body:
         # accepted and ignored: the knob trades total-count accuracy
         # for speed in ES; this engine's counts are exact either way
@@ -448,10 +456,10 @@ def compile_search(
     if isinstance(body.get("_source"), dict):
         # the ES object form: {"includes": [...], "excludes": [...]},
         # either side optional, wildcards allowed — normalized to the
-        # plain list form against the compile-time column inventory
-        # (the ES|QL multi-index schema map; known fixture tables and
-        # live registrations). Excludes/wildcards over a table outside
-        # the inventory raise — resolution needs the column set.
+        # plain list form against ``index``'s columns in ``schemas``
+        # (the gateway passes the request session's catalog schema,
+        # oracles the fixture footers). Excludes/wildcards over an
+        # index without a schema raise — resolution needs the columns.
         src = body["_source"]
         bad = set(src) - {"includes", "excludes"}
         if bad:
@@ -467,17 +475,12 @@ def compile_search(
         if exc or any("*" in str(p) for p in inc):
             import fnmatch  # noqa: PLC0415
 
-            from golang_db_query_engine_elasticsearch_indexer_spark.operators.esql import (  # noqa: PLC0415
-                _TABLE_COLUMNS,
-            )
-
-            if index not in _TABLE_COLUMNS:
+            if index not in (schemas or {}):
                 raise ValueError(
                     "es_dsl: _source excludes/wildcards need the "
-                    f"column inventory; index {index!r} is not a "
-                    "registered table"
+                    f"schema of index {index!r}"
                 )
-            cols = _TABLE_COLUMNS[index]
+            cols = schemas[index].names
             keep = [
                 c for c in cols
                 if any(fnmatch.fnmatchcase(c, str(p)) for p in inc)
@@ -1170,9 +1173,10 @@ ORDER BY {id_field}, query_id
 def _entry(index: str, body: dict, id_field: str,
            relations: dict | None = None):
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return spark.sql(
-            compile_search(index, body, "spark", id_field, relations)
-        )
+        schemas = {index: spark.table(index).schema}
+        return spark.sql(compile_search(
+            index, body, "spark", id_field, relations, schemas
+        ))
 
     return run
 
@@ -1364,29 +1368,39 @@ def _alias_multi_search_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     return es_search_df(spark, "parties_all", ALIAS_MULTI_BODY)
 
 
-def _union_oracle(targets: tuple[str, ...], body: dict) -> str:
-    """DuckDB oracle for a multi-index/alias search: the same
-    missing-column-as-NULL union gateway._union_view materializes —
-    including its never-NULL ``_uid`` id column, which is also the
-    oracle's sort tiebreak — inlined as a CTE over the concrete
-    tables, then the same compiled body. The CTE name is local to
-    this statement (compare() matches rows, not identifiers), so a
-    fixed identifier beats recomputing gateway's digest naming."""
+# the CTE name a multi-index search compiles against
+_UNION = "_union_indices"
+
+
+def compile_union_search(
+    schemas: dict[str, StructType], body: dict, dialect: str,
+    count: bool = False,
+) -> str:
+    """A `_search` (``count``: `_count`) over several indices: the ES
+    missing-column-as-NULL union of the tables in ``schemas``
+    (esql.union_all_sql), inlined as the first CTE of the compiled
+    body's WITH list. The union's never-NULL ``_uid`` column is the
+    id — sort tiebreak, slice hash, pagination key — since its first
+    column is NULL for rows from tables lacking it; ``_uid`` rides
+    along in `_source: true` responses, the stand-in for the ES hit
+    `_id`. The gateway passes the request session's catalog schemas,
+    DuckDB oracles the fixture footers."""
     from golang_db_query_engine_elasticsearch_indexer_spark.operators.esql import (  # noqa: PLC0415
-        _TABLE_COLUMNS,
         union_all_sql,
     )
 
-    union = union_all_sql(
-        {t: _TABLE_COLUMNS[t] for t in targets}, uid=True
+    if count:
+        inner = compile_count(_UNION, body, dialect, "_uid")
+    else:
+        inner = compile_search(_UNION, body, dialect, "_uid")
+    return _with_cte(
+        f"{_UNION} AS (\n{union_all_sql(schemas, uid=True)}\n)", inner
     )
-    inner = compile_search("__indices_u", body, "duck", "_uid")
-    return f"WITH __indices_u AS (\n{union}\n)\n{inner}"
 
 
 def _multi_index_search_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Search addressed at the wildcard index expression `*ion`
-    (region + nation): the ES comma/wildcard multi-index read. The
+    (nation + region): the ES comma/wildcard multi-index read. The
     oracle inlines the identical missing-column-as-NULL union — the
     differential proves wildcard expansion IS that union."""
     from golang_db_query_engine_elasticsearch_indexer_spark.gateway import (  # noqa: PLC0415
@@ -1397,6 +1411,10 @@ def _multi_index_search_entry(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def registry() -> dict[str, dict]:
+    from golang_db_query_engine_elasticsearch_indexer_spark.session import (  # noqa: PLC0415
+        footer_schemas,
+    )
+
     return {
         "es_dsl_bool_filter": {
             "fn": _entry("documents", BOOL_FILTER_BODY, "doc_id"),
@@ -1451,7 +1469,8 @@ def registry() -> dict[str, dict]:
         "es_dsl_source_filtering": {
             "fn": _entry("documents", SOURCE_FILTERING_BODY, "doc_id"),
             "oracle": compile_search(
-                "documents", SOURCE_FILTERING_BODY, "duck"
+                "documents", SOURCE_FILTERING_BODY, "duck",
+                schemas=footer_schemas(("documents",)),
             ),
         },
         "es_dsl_multi_match": {
@@ -1907,14 +1926,16 @@ def registry() -> dict[str, dict]:
         },
         "es_alias_multi_search": {
             "fn": _alias_multi_search_entry,
-            "oracle": _union_oracle(
-                ("customer", "supplier"), ALIAS_MULTI_BODY
+            "oracle": compile_union_search(
+                footer_schemas(("customer", "supplier")),
+                ALIAS_MULTI_BODY, "duck",
             ),
         },
         "es_multi_index_search": {
             "fn": _multi_index_search_entry,
-            "oracle": _union_oracle(
-                ("region", "nation"), MULTI_INDEX_SEARCH_BODY
+            "oracle": compile_union_search(
+                footer_schemas(("nation", "region")),
+                MULTI_INDEX_SEARCH_BODY, "duck",
             ),
         },
         "es_dsl_suggest_phrase": {

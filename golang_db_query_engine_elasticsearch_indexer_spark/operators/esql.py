@@ -14,10 +14,13 @@ Supported source commands: FROM <index> [, <index>]...
 [METADATA _index] (the source-name column that makes multi-index
 reads filterable by origin; other metadata fields raise) and
 ROW name = <expr> [, ...] (the inline one-row relation).
-Multi-index and wildcard FROM (`FROM idx1,idx2`, `FROM doc*`) compile
-to UNION ALL over the matching REGISTERED fixture tables with the ES
-missing-column-as-NULL rule (columns resolve against the static
-fixture schema, _TABLE_COLUMNS; unknown names raise loudly).
+Multi-index FROM (`FROM idx1,idx2`) compiles to UNION ALL over the
+listed tables with the ES missing-column-as-NULL rule; the caller
+passes each table's schema (compile_esql's ``schemas``), and a listed
+table without one raises loudly. esql_df reads those schemas from the
+request session's catalog, after expanding aliases and wildcards
+(`FROM doc*`) against that session's tables; DuckDB oracles pass
+fixture footer schemas (session.footer_schemas).
 Processing commands, applied in pipe order:
 
 - WHERE <boolean expr>
@@ -122,6 +125,7 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 _DEC = "DECIMAL(28, 6)"
 
@@ -203,6 +207,11 @@ _EXTRACT_FIELDS = {
 }
 
 _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+# the FROM source command: (FROM )(index list)( METADATA (field))
+_FROM = re.compile(
+    r"(?is)(FROM\s+)([A-Za-z0-9_*]+(?:\s*,\s*[A-Za-z0-9_*]+)*)"
+    r"(\s+METADATA\s+(\S+))?"
+)
 
 
 def _tokenize(s: str, what: str) -> list[str]:
@@ -1016,133 +1025,34 @@ class _Expr:
         return f"{fn}({', '.join(args)})"
 
 
-# Column inventory of the registered fixture tables. Multi-index /
-# wildcard FROM needs the column sets at COMPILE time — the text
-# compiler runs with no live session (registry() compiles oracles at
-# import) — so the union's missing-column-as-NULL projection resolves
-# against this map. It is DERIVED, not hand-pinned (VERDICT r11 ask
-# #2): parquet footers of the fixture dir (the same files
-# session.register_sf_dir registers — schemas are identical across
-# scale factors), read lazily on first multi-index compile and merged
-# with any columns published by live register_sf_dir calls — so a
-# newly registered table is multi-index-addressable with no literal
-# edit. A multi-index FROM naming a table outside the map raises
-# loudly; single-index FROM keeps accepting any identifier
-# (resolution happens at execution, as before).
-_FOOTER_COLUMNS: dict[str, list[str]] | None = None
-
-# Companion map: per table, the columns whose cast-to-STRING rendering
-# is bit-identical across Spark and DuckDB (integers, strings,
-# booleans, dates, decimals — NOT floats/timestamps/nested types,
-# whose text forms can diverge). union_all_sql's _uid whole-row hash
-# is restricted to these so it stays cross-engine deterministic.
-_FOOTER_UID_SAFE: dict[str, list[str]] | None = None
+# Types whose cast-to-STRING rendering is bit-identical across Spark and
+# DuckDB — NOT floats/timestamps/nested types, whose text forms can
+# diverge. union_all_sql's _uid whole-row hash is restricted to these
+# so it stays cross-engine deterministic.
+_UID_SAFE_TYPES = (
+    T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+    T.StringType, T.BooleanType, T.DateType, T.DecimalType,
+)
 
 
-def _pa_uid_safe(t) -> bool:
-    import pyarrow.types as pt  # noqa: PLC0415
-
-    return (
-        pt.is_integer(t) or pt.is_string(t) or pt.is_large_string(t)
-        or pt.is_boolean(t) or pt.is_date(t) or pt.is_decimal(t)
-    )
-
-
-class _TableColumns:
-    """Lazy read-only mapping: footer-derived fixture schemas overlaid
-    with live-registration-published ones (session.TABLE_COLUMNS)."""
-
-    def _snapshot(self) -> dict[str, list[str]]:
-        global _FOOTER_COLUMNS, _FOOTER_UID_SAFE
-        if _FOOTER_COLUMNS is None:
-            import os  # noqa: PLC0415
-
-            import pyarrow.parquet as pq  # noqa: PLC0415
-
-            from golang_db_query_engine_elasticsearch_indexer_spark.session import (  # noqa: PLC0415
-                DEFAULT_SF_DIR,
-                FIXTURE_TABLES,
-            )
-
-            cols: dict[str, list[str]] = {}
-            safe: dict[str, list[str]] = {}
-            for t in FIXTURE_TABLES:
-                path = os.path.join(DEFAULT_SF_DIR, f"{t}.parquet")
-                if os.path.exists(path):
-                    schema = pq.read_schema(path)
-                    cols[t] = [f.name for f in schema]
-                    safe[t] = [
-                        f.name for f in schema if _pa_uid_safe(f.type)
-                    ]
-            _FOOTER_COLUMNS = cols
-            _FOOTER_UID_SAFE = safe
-        from golang_db_query_engine_elasticsearch_indexer_spark.session import (  # noqa: PLC0415
-            TABLE_COLUMNS,
-        )
-
-        out = dict(_FOOTER_COLUMNS)
-        out.update(TABLE_COLUMNS)
-        return out
-
-    def uid_safe(self) -> dict[str, list[str]]:
-        """Per-table cross-engine-stable (cast-to-STRING) columns:
-        footer-derived defaults overlaid with the live-registration
-        map, mirroring _snapshot()'s precedence."""
-        self._snapshot()  # populate _FOOTER_UID_SAFE
-        from golang_db_query_engine_elasticsearch_indexer_spark.session import (  # noqa: PLC0415
-            TABLE_UID_SAFE,
-        )
-
-        out = dict(_FOOTER_UID_SAFE or {})
-        out.update(TABLE_UID_SAFE)
-        return out
-
-    def __getitem__(self, key: str) -> list[str]:
-        snap = self._snapshot()
-        if key not in snap:
-            # a bare KeyError here surfaces as an unexplained crash
-            # inside registry()/oracle compilation on machines where
-            # the fixture dir is absent — name the actual cause
-            import os  # noqa: PLC0415
-
-            from golang_db_query_engine_elasticsearch_indexer_spark.session import (  # noqa: PLC0415
-                DEFAULT_SF_DIR,
-            )
-
-            hint = (
-                "" if os.path.isdir(DEFAULT_SF_DIR) else
-                f" (fixture dir {DEFAULT_SF_DIR!r} is absent and no "
-                "live register_sf_dir has published schemas — set "
-                "SPARK_GRAFT_SF_DIR or register the tables first)"
-            )
-            raise ValueError(
-                f"esql: no column inventory for table {key!r}{hint}"
-            )
-        return snap[key]
-
-    def __contains__(self, key) -> bool:
-        return key in self._snapshot()
-
-    def __iter__(self):
-        return iter(self._snapshot())
-
-    def items(self):
-        return self._snapshot().items()
-
-
-_TABLE_COLUMNS = _TableColumns()
+def uid_safe_columns(schema: T.StructType) -> list[str]:
+    """The columns of ``schema`` that union_all_sql's ``_uid`` hashes."""
+    return [
+        f.name for f in schema.fields
+        if isinstance(f.dataType, _UID_SAFE_TYPES)
+    ]
 
 
 def union_all_sql(
-    table_cols: dict[str, list[str]], meta: bool = False,
+    schemas: dict[str, T.StructType], meta: bool = False,
     uid: bool = False,
 ) -> str:
-    """The ES missing-column-as-NULL UNION ALL over named tables:
-    column order is first-seen across the tables (the ES multi-index
-    rule); ``meta`` appends the source name as ``_index``; ``uid``
-    appends ``_uid`` — the source name prefixed onto an md5 over the
-    branch's OWN cross-engine-stable columns (ints/strings/bools/
-    dates/decimals; see _TableColumns.uid_safe) — a NEVER-NULL,
+    """The ES missing-column-as-NULL UNION ALL over named tables, given
+    each table's schema: column order is first-seen across the tables
+    (the ES multi-index rule); ``meta`` appends the source name as
+    ``_index``; ``uid`` appends ``_uid`` — the source name prefixed
+    onto an md5 over the branch's OWN cross-engine-stable columns
+    (uid_safe_columns) — a NEVER-NULL,
     unique-per-distinct-row identity the search path's sort tiebreak
     / slice hashing / search_after need. A first-column-only _uid
     (the r12 shape) collided for rows sharing that value (e.g.
@@ -1158,32 +1068,29 @@ def union_all_sql(
     Bit-identical duplicate rows still share a _uid —
     indistinguishable rows have no meaningful order, so every
     engine-arbitrary choice among them yields the same result set.
-    Tables with no uid_safe entry (unregistered, non-fixture) fall
-    back to the first column, documented caveat. Shared by the ES|QL
-    multi-index FROM compile and the gateway's multi-target alias
-    search (gateway._search_relation). Valid in both dialects —
-    plain SELECT/UNION ALL (STRING is a VARCHAR alias in DuckDB;
-    md5/concat_ws render identically). Per-column md5 is row-local
-    JVM/codegen work on the already-bounded search relation — the
-    scale cost is the same class as any projection expression."""
-    if not table_cols:
+    A table with no stable column hashes its first column, documented
+    caveat. Shared by the ES|QL multi-index FROM compile and the
+    multi-index search (es_dsl.compile_union_search). Valid in both
+    dialects — plain SELECT/UNION ALL (STRING is a VARCHAR alias in
+    DuckDB; md5/concat_ws render identically). Per-column md5 is
+    row-local JVM/codegen work on the already-bounded search
+    relation — the scale cost is the same class as any projection
+    expression."""
+    if not schemas:
         raise ValueError("esql: union_all_sql wants >= 1 table")
-    uid_safe = _TABLE_COLUMNS.uid_safe() if uid else {}
     unified: list[str] = []
-    for cols in table_cols.values():
-        unified.extend(c for c in cols if c not in unified)
+    for schema in schemas.values():
+        unified.extend(c for c in schema.names if c not in unified)
     selects = []
-    for t, cols in table_cols.items():
-        have = set(cols)
+    for t, schema in schemas.items():
+        have = set(schema.names)
         proj = ", ".join(
             c if c in have else f"NULL AS {c}" for c in unified
         )
         if meta:
             proj += f", '{t}' AS _index"
         if uid:
-            key_cols = [
-                c for c in cols if c in set(uid_safe.get(t, ()))
-            ] or [cols[0]]
+            key_cols = uid_safe_columns(schema) or schema.names[:1]
             parts = ", ".join(
                 f"(CASE WHEN {c} IS NULL THEN 'n' ELSE "
                 f"concat('v', md5(cast({c} AS STRING))) END)"
@@ -1197,15 +1104,16 @@ def union_all_sql(
     return "\n  UNION ALL ".join(selects)
 
 
-def _compile_from(stage: str, dialect: str) -> str:
+def _compile_from(
+    stage: str, dialect: str, schemas: dict[str, T.StructType]
+) -> str:
     """The source command: FROM — one index (any identifier), or a
-    comma-list / wildcard over the registered fixture tables, unioned
-    with the ES missing-column-as-NULL rule (column order: first-seen
-    across the selected tables) — or ROW name = <expr> [, ...], the
-    inline one-row relation every ES|QL tutorial opens with (compiles
-    to a FROM-less SELECT, valid in both dialects)."""
-    import fnmatch  # noqa: PLC0415
-
+    comma-list over tables whose ``schemas`` the caller passes,
+    unioned with the ES missing-column-as-NULL rule (column order:
+    first-seen across the listed tables) — or ROW name = <expr>
+    [, ...], the inline one-row relation every ES|QL tutorial opens
+    with (compiles to a FROM-less SELECT, valid in both dialects).
+    Wildcards and aliases are expanded before compile (esql_df)."""
     if re.match(r"(?is)^\s*ROW\b", stage):
         toks = _tokenize(stage, "ROW")[1:]
         cols = []
@@ -1218,61 +1126,45 @@ def _compile_from(stage: str, dialect: str) -> str:
             e = _Expr(part[2:], "ROW", dialect=dialect).parse()
             cols.append(f"{e} AS {part[0]}")
         return f"SELECT {', '.join(cols)}"
-    m = re.fullmatch(r"(?is)FROM\s+([A-Za-z0-9_*]+(?:\s*,\s*"
-                     r"[A-Za-z0-9_*]+)*)(\s+METADATA\s+(\S+))?",
-                     stage.strip())
+    m = _FROM.fullmatch(stage.strip())
     if not m:
         raise ValueError(
             "esql: the source command must be FROM <index>[, <index>] "
             f"[METADATA _index] or ROW (got {stage!r})"
         )
     meta = None
-    if m.group(2):
+    if m.group(3):
         # METADATA _index: the source index name as a column — the
         # idiom that makes multi-index FROM filterable/groupable by
         # origin. _id/_version etc. have no engine analogue and raise.
-        if m.group(3) != "_index":
+        if m.group(4) != "_index":
             raise ValueError(
-                f"esql: unsupported METADATA field {m.group(3)!r} "
+                f"esql: unsupported METADATA field {m.group(4)!r} "
                 "(only _index)"
             )
         meta = "_index"
-    parts = [p.strip() for p in m.group(1).split(",")]
-    if len(parts) == 1 and "*" not in parts[0]:
-        index = parts[0]
-        if not _IDENT.fullmatch(index):
-            raise ValueError(f"esql: bad index name {index!r}")
-        if meta:
-            return f"SELECT *, '{index}' AS _index FROM {index}"
-        return f"SELECT * FROM {index}"
-    tables: list[str] = []
-    for p in parts:
+    tables = list(dict.fromkeys(p.strip() for p in m.group(2).split(",")))
+    for p in tables:
         if "*" in p:
-            hits = sorted(
-                t for t in _TABLE_COLUMNS if fnmatch.fnmatchcase(t, p)
+            raise ValueError(
+                f"esql: FROM pattern {p!r} must be expanded before "
+                "compile (esql_df resolves it against the session's "
+                "tables)"
             )
-            if not hits:
-                raise ValueError(
-                    f"esql: FROM pattern {p!r} matches no registered "
-                    "index"
-                )
-            tables.extend(t for t in hits if t not in tables)
-        else:
-            if p not in _TABLE_COLUMNS:
-                raise ValueError(
-                    f"esql: multi-index FROM knows only the registered "
-                    f"fixture tables ({'/'.join(sorted(_TABLE_COLUMNS))});"
-                    f" got {p!r}"
-                )
-            if p not in tables:
-                tables.append(p)
+        if not _IDENT.fullmatch(p):
+            raise ValueError(f"esql: bad index name {p!r}")
     if len(tables) == 1:
         if meta:
             return f"SELECT *, '{tables[0]}' AS _index FROM {tables[0]}"
         return f"SELECT * FROM {tables[0]}"
-    return union_all_sql(
-        {t: _TABLE_COLUMNS[t] for t in tables}, meta=bool(meta)
-    )
+    unknown = [t for t in tables if t not in schemas]
+    if unknown:
+        raise ValueError(
+            "esql: multi-index FROM knows only the tables whose schemas "
+            f"it is given ({'/'.join(sorted(schemas)) or 'none'}); got "
+            f"{'/'.join(unknown)}"
+        )
+    return union_all_sql({t: schemas[t] for t in tables}, meta=bool(meta))
 
 
 def _split_pipes(q: str) -> list[str]:
@@ -1350,14 +1242,18 @@ def _split_top_commas(toks: list[str]) -> list[list[str]]:
     return out
 
 
-def compile_esql(query: str, dialect: str) -> str:
-    """Compile one ES|QL statement to one SQL statement."""
+def compile_esql(
+    query: str, dialect: str,
+    schemas: dict[str, T.StructType] | None = None,
+) -> str:
+    """Compile one ES|QL statement to one SQL statement. A multi-index
+    FROM reads each listed table's columns from ``schemas``."""
     if dialect not in ("spark", "duck"):
         raise ValueError(f"esql: unknown dialect {dialect!r}")
     if not isinstance(query, str) or not query.strip():
         raise ValueError("esql: empty query")
     stages = _split_pipes(query)
-    sql = _compile_from(stages[0], dialect)
+    sql = _compile_from(stages[0], dialect, schemas or {})
     n = 0
     for stage in stages[1:]:
         if re.match(r"(?is)^\s*FORK\b", stage):
@@ -1989,56 +1885,47 @@ def _compile_extract(cmd: str, rest: list[str], inner: str,
     return f"SELECT *, {', '.join(cols)} FROM {inner}"
 
 
-def _expand_from_aliases(spark: SparkSession, query: str) -> str:
-    """Textually expand gateway index aliases in the FROM stage to
-    their concrete target names (real ES resolves aliases in ES|QL
-    FROM too). A multi-target alias expands to a comma list — the
-    multi-index FROM machinery then builds the same
-    missing-column-as-NULL union the _search path uses. Resolution
-    happens at QUERY time against the live alias registry, keeping
-    aliases pure metadata. Wildcard parts pass through unchanged
-    (they match fixture tables, the documented FROM grammar)."""
+def _resolve_from(
+    spark: SparkSession, query: str
+) -> tuple[str, dict[str, T.StructType]]:
+    """The query with its FROM index expression expanded to concrete
+    tables, and their schemas from ``spark``'s catalog. Aliases and
+    wildcards resolve as in _search (gateway._expand_index_expression:
+    real ES resolves both in ES|QL FROM too); a multi-target alias
+    becomes the multi-index union. One plain table name is returned
+    as it is, with no catalog call."""
     from golang_db_query_engine_elasticsearch_indexer_spark.gateway import (  # noqa: PLC0415
-        _alias_targets,
         _aliases,
+        _expand_index_expression,
     )
 
     stages = _split_pipes(query)
-    m = re.fullmatch(
-        r"(?is)(FROM\s+)([A-Za-z0-9_*]+(?:\s*,\s*[A-Za-z0-9_*]+)*)"
-        r"(\s+METADATA\s+\S+)?",
-        stages[0].strip(),
-    )
+    m = _FROM.fullmatch(stages[0].strip())
     if not m:
-        return query
-    parts = [p.strip() for p in m.group(2).split(",")]
-    out: list[str] = []
-    for p in parts:
-        if "*" not in p and p in _aliases(spark):
-            for t in _alias_targets(spark, p):
-                if t not in out:
-                    out.append(t)
-        elif p not in out:
-            out.append(p)
-    if out == parts:
-        return query
-    new_from = m.group(1) + ", ".join(out) + (m.group(3) or "")
-    return " | ".join([new_from, *stages[1:]])
+        return query, {}
+    expr = m.group(2)
+    if "," not in expr and "*" not in expr and expr not in _aliases(spark):
+        return query, {}
+    tables = _expand_index_expression(spark, expr)
+    new_from = m.group(1) + ", ".join(tables) + (m.group(3) or "")
+    query = " | ".join([new_from, *stages[1:]])
+    if len(tables) == 1:
+        return query, {}
+    return query, {t: spark.table(t).schema for t in tables}
 
 
 def esql_df(spark: SparkSession, query: str) -> DataFrame:
     """`POST /_query` parity: one ES|QL statement, lazily compiled to a
-    Catalyst plan over the registered tables. FROM accepts gateway
-    index aliases (expanded to concrete names before compile — a
-    multi-target alias becomes the multi-index union)."""
+    Catalyst plan over ``spark``'s tables. FROM accepts gateway index
+    aliases and wildcards (_resolve_from)."""
     from golang_db_query_engine_elasticsearch_indexer_spark.errors import (  # noqa: PLC0415
         ParamsNullError,
     )
 
     if query is None:
         raise ParamsNullError()
-    query = _expand_from_aliases(spark, query)
-    return spark.sql(compile_esql(query, "spark"))
+    query, schemas = _resolve_from(spark, query)
+    return spark.sql(compile_esql(query, "spark", schemas))
 
 
 # --- registered kernels --------------------------------------------------------
@@ -2240,11 +2127,17 @@ ESQL_BUCKET = """FROM events
 
 
 def registry() -> dict[str, dict]:
+    from golang_db_query_engine_elasticsearch_indexer_spark.session import (  # noqa: PLC0415
+        footer_schemas,
+    )
+
     def entry(q: str):
         def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-            return spark.sql(compile_esql(q, "spark"))
+            return esql_df(spark, q)
 
         return run
+
+    region_nation = footer_schemas(("region", "nation"))
 
     return {
         "esql_filter_stats": {
@@ -2321,7 +2214,7 @@ def registry() -> dict[str, dict]:
         },
         "esql_multi_index": {
             "fn": entry(ESQL_MULTI_INDEX),
-            "oracle": compile_esql(ESQL_MULTI_INDEX, "duck"),
+            "oracle": compile_esql(ESQL_MULTI_INDEX, "duck", region_nation),
         },
         "esql_stats_where": {
             "fn": entry(ESQL_STATS_WHERE),
@@ -2345,7 +2238,7 @@ def registry() -> dict[str, dict]:
         },
         "esql_from_metadata": {
             "fn": entry(ESQL_FROM_METADATA),
-            "oracle": compile_esql(ESQL_FROM_METADATA, "duck"),
+            "oracle": compile_esql(ESQL_FROM_METADATA, "duck", region_nation),
         },
         "esql_date_extract_locate": {
             "fn": entry(ESQL_DATE_EXTRACT_LOCATE),

@@ -37,6 +37,11 @@ CHANGED: dict[str, int] = {
     "sample_dsir_importance": 15,
     "stream_hll_daily_merged": 15,
     "tokens_bpe_merge_learn": 15,
+    "es_dsl_source_filtering": 15,
+    "es_alias_multi_search": 15,
+    "es_multi_index_search": 15,
+    "esql_multi_index": 15,
+    "esql_from_metadata": 15,
 }
 
 _ROOT = Path(__file__).resolve().parent.parent

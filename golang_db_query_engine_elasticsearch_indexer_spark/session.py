@@ -171,29 +171,27 @@ def default_registry() -> SourceRegistry:
     return reg
 
 
-#: Column names of every table register_sf_dir has registered, by
-#: name — the single source of truth the ES|QL compile-time schema
-#: map (operators/esql._TABLE_COLUMNS) overlays on its footer-derived
-#: defaults, so a newly registered table is multi-index-addressable
-#: with no literal edit (VERDICT r11 ask #2).
-TABLE_COLUMNS: dict[str, list[str]] = {}
+def footer_schemas(
+    tables: tuple[str, ...], sf_dir: str = DEFAULT_SF_DIR
+) -> dict[str, T.StructType]:
+    """``{table: schema}`` for fixture tables of ``sf_dir``, read from the
+    Parquet footers with no session: the schemas DuckDB oracles compile
+    against. Timestamps map to timestamp_ntz, as the catalog surfaces
+    them (register_sf_dir converts nanosecond columns to the same)."""
+    import pyarrow.parquet as pq  # noqa: PLC0415
+    from pyspark.sql.pandas.types import from_arrow_schema  # noqa: PLC0415
 
-#: Per-table columns whose cast-to-STRING rendering is bit-identical
-#: across Spark and DuckDB (integers, strings, booleans, dates,
-#: decimals — NOT floats/timestamps/arrays, whose text forms can
-#: diverge between engines). The multi-index UNION ALL's ``_uid``
-#: whole-row hash (operators/esql.union_all_sql; ADVICE r12 medium:
-#: first-column _uid wasn't unique) hashes exactly these columns so
-#: the id is unique per distinct row AND cross-engine deterministic.
-TABLE_UID_SAFE: dict[str, list[str]] = {}
+    return {
+        t: from_arrow_schema(
+            pq.read_schema(os.path.join(sf_dir, f"{t}.parquet")),
+            prefer_timestamp_ntz=True,
+        )
+        for t in tables
+    }
+
 
 # Serializes database creation, so no session sees a half-built source.
 _CREATE_LOCK = threading.Lock()
-
-_UID_SAFE_TYPES = (
-    T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-    T.StringType, T.BooleanType, T.DateType, T.DecimalType,
-)
 
 
 def register_sf_dir(spark: SparkSession, sf_dir: str) -> str:
@@ -228,7 +226,7 @@ def register_sf_dir(spark: SparkSession, sf_dir: str) -> str:
 
 
 def _create_table(spark: SparkSession, db: str, name: str, path: str) -> None:
-    """Create ``db.name`` over ``path`` and publish its columns. Where a
+    """Create ``db.name`` over ``path``. Where a
     NANO_TS_COLUMNS column surfaces as LongType, ``db.name`` is a view
     converting it to timestamp_ntz over the raw table ``db._raw_name``."""
     schema = spark.read.parquet(path).schema
@@ -245,8 +243,3 @@ def _create_table(spark: SparkSession, db: str, name: str, path: str) -> None:
             for c in schema.names
         )
         spark.sql(f"CREATE VIEW {db}.{name} AS SELECT {cols} FROM {table}")
-    TABLE_COLUMNS[name] = schema.names
-    TABLE_UID_SAFE[name] = [
-        f.name for f in schema.fields
-        if f.name not in nanos and isinstance(f.dataType, _UID_SAFE_TYPES)
-    ]

@@ -1110,6 +1110,103 @@ def test_concurrent_requests_answer_from_the_source_they_name(spark, tables):
         "spark.sql.shuffle.partitions")
 
 
+def test_two_sources_compile_against_their_own_schemas(spark, tables, tmp_path):
+    """Two sources with a same-named table of different columns: every
+    request compiles against its own session's catalog. A process-wide
+    column map, written by whichever source registered last, made the
+    first source's `_source` excludes search and multi-index ES|QL FROM
+    fail on the second source's columns."""
+    import threading
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from golang_db_query_engine_elasticsearch_indexer_spark import gateway
+    from golang_db_query_engine_elasticsearch_indexer_spark.operators.esql import (
+        esql_df,
+    )
+
+    pq.write_table(pa.table({
+        "o_orderkey": pa.array([1, 2, 3], pa.int64()),
+        "o_extra": pa.array(["x", "y", "z"]),
+    }), tmp_path / "orders.parquet")
+    pq.write_table(pa.table({
+        "c_custkey": pa.array([7, 8], pa.int64()),
+        "c_name": pa.array(["p", "q"]),
+    }), tmp_path / "customer.parquet")
+    reg = SourceRegistry()
+    reg.register_source("parquet", "a", SF_DIR)
+    reg.register_source("parquet", "b", str(tmp_path))
+    sessions = {db: gateway.attach(spark, reg, "parquet", db) for db in "ab"}
+    excludes = {"_source": {"excludes": ["o_comment"]}, "size": 1000}
+
+    def answers(child):
+        hits = gateway.es_search_df(child, "orders", excludes)
+        union = esql_df(child, "FROM orders, customer | STATS n = COUNT(*)")
+        return (
+            hits.columns, hits.count(), union.collect()[0]["n"],
+            gateway.es_count(child, "ord*"),
+        )
+
+    want = {}
+    for db, child in sessions.items():
+        orders, customer = child.table("orders"), child.table("customer")
+        n = orders.count()
+        want[db] = (orders.columns, min(n, 1000), n + customer.count(), n)
+    assert want["b"] == (["o_orderkey", "o_extra"], 3, 5, 3)
+    assert want["a"][0] != want["b"][0]
+    got: dict = {}
+
+    def run(db):
+        try:
+            got[db] = answers(sessions[db])
+        except Exception as exc:  # noqa: BLE001 — reported below
+            got[db] = exc
+
+    threads = [threading.Thread(target=run, args=(db,)) for db in "ab"]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+        assert not t.is_alive()
+    assert got == want
+
+
+def test_multi_index_search_merges_the_union_cte(spark, tables):
+    """A `match` body compiles to a leading WITH; the multi-index union
+    CTE must join that WITH list (a second WITH is a syntax error in
+    both engines). The gateway's answer equals DuckDB running the same
+    function's duck SQL, and the search leaves no view in the catalog."""
+    from golang_db_query_engine_elasticsearch_indexer_spark import gateway
+    from golang_db_query_engine_elasticsearch_indexer_spark.operators.es_dsl import (
+        compile_union_search,
+    )
+    from golang_db_query_engine_elasticsearch_indexer_spark.oracle import (
+        compare,
+        duckdb_connection,
+    )
+    from golang_db_query_engine_elasticsearch_indexer_spark.session import (
+        footer_schemas,
+    )
+
+    body = {"query": {"match": {"text": "table scan fast"}}, "size": 25}
+    before = {t.name for t in spark.catalog.listTables()}
+    df = gateway.es_search_df(spark, "documents,events", body)
+    duck_sql = compile_union_search(
+        footer_schemas(("documents", "events"), SF_DIR), body, "duck"
+    )
+    assert duck_sql.startswith("WITH _union_indices AS (")
+    assert duck_sql.count("WITH ") == 1
+    con = duckdb_connection(SF_DIR)
+    try:
+        ok, diag = compare(df, con, duck_sql)
+    finally:
+        con.close()
+    assert ok, diag
+    assert df.count() == 25
+    assert {t.name for t in spark.catalog.listTables()} == before
+
+
 def test_es_mtermvectors_route(client):
     """_mtermvectors: one statement for N docs; missing ids report
     found=false, the ES docs-envelope shape."""
@@ -1184,16 +1281,11 @@ def test_es_multi_index_expression_routes(client, clean_aliases):
 def test_wildcard_sees_runtime_registered_tables(spark, tables):
     """ADVICE r12: a table registered at runtime (outside the fixture
     list) was comma-addressable but invisible to '*' patterns —
-    wildcards must follow the same live-registration overlay the
-    compiler uses."""
-    from golang_db_query_engine_elasticsearch_indexer_spark import (
-        gateway, session,
-    )
+    wildcards must match every table of the session's catalog
+    database, and no temp view."""
+    from golang_db_query_engine_elasticsearch_indexer_spark import gateway
 
-    spark.range(3).toDF("rt_id").createOrReplaceTempView(
-        "runtime_zzz_tbl")
-    session.TABLE_COLUMNS["runtime_zzz_tbl"] = ["rt_id"]
-    session.TABLE_UID_SAFE["runtime_zzz_tbl"] = ["rt_id"]
+    spark.sql("CREATE TABLE runtime_zzz_tbl (rt_id BIGINT) USING parquet")
     try:
         assert gateway._expand_index_expression(
             spark, "runtime_zzz_*") == ("runtime_zzz_tbl",)
@@ -1206,9 +1298,7 @@ def test_wildcard_sees_runtime_registered_tables(spark, tables):
         assert "__internal_zzz" not in gateway._expand_index_expression(
             spark, "*")
     finally:
-        session.TABLE_COLUMNS.pop("runtime_zzz_tbl", None)
-        session.TABLE_UID_SAFE.pop("runtime_zzz_tbl", None)
-        spark.catalog.dropTempView("runtime_zzz_tbl")
+        spark.sql("DROP TABLE IF EXISTS runtime_zzz_tbl")
         spark.catalog.dropTempView("__internal_zzz")
 
 

@@ -533,27 +533,33 @@ def test_match_scored_query_context(tiny):
 
 def test_source_object_form(spark, tables, sf_dir, duck):
     """_source as {"includes": [...], "excludes": [...]}: wildcards
-    and excludes resolve against the compile-time column inventory;
+    and excludes resolve against the schema passed for the index;
     plain includes work on any table; empty selections and unknown
     keys are loud."""
     from golang_db_query_engine_elasticsearch_indexer_spark.oracle import compare
+
+    schemas = {"documents": spark.table("documents").schema}
 
     body = {"query": {"term": {"lang": "en"}},
             "_source": {"includes": ["doc_id", "n_*"],
                         "excludes": ["n_chars"]},
             "sort": [{"doc_id": "asc"}], "size": 5}
-    sql = compile_search("documents", body, "spark")
+    sql = compile_search("documents", body, "spark", schemas=schemas)
     df = spark.sql(sql)
     assert df.columns == ["doc_id"]  # n_* minus n_chars = nothing else
-    ok, diag = compare(df, duck, compile_search("documents", body, "duck"))
+    ok, diag = compare(
+        df, duck, compile_search("documents", body, "duck", schemas=schemas)
+    )
     assert ok, diag
     # excludes-only: everything but text
     body2 = {"query": {"term": {"lang": "en"}},
              "_source": {"excludes": ["text"]},
              "sort": [{"doc_id": "asc"}], "size": 5}
-    df2 = spark.sql(compile_search("documents", body2, "spark"))
+    df2 = spark.sql(
+        compile_search("documents", body2, "spark", schemas=schemas)
+    )
     assert "text" not in df2.columns and "lang" in df2.columns
-    # plain includes (no wildcards) need no inventory
+    # plain includes (no wildcards) need no schema
     body3 = {"query": {"match_all": {}},
              "_source": {"includes": ["doc_id"]},
              "sort": [{"doc_id": "asc"}], "size": 3}
@@ -562,13 +568,13 @@ def test_source_object_form(spark, tables, sf_dir, duck):
     import pytest as _pytest
     with _pytest.raises(ValueError, match="selected no fields"):
         compile_search("documents", {
-            "_source": {"includes": ["zz_*"]}}, "duck")
+            "_source": {"includes": ["zz_*"]}}, "duck", schemas=schemas)
     with _pytest.raises(ValueError, match="unsupported _source keys"):
         compile_search("documents", {
             "_source": {"include": ["doc_id"]}}, "duck")
-    with _pytest.raises(ValueError, match="not a registered table"):
+    with _pytest.raises(ValueError, match="need the schema of index"):
         compile_search("sometable", {
-            "_source": {"excludes": ["x"]}}, "duck")
+            "_source": {"excludes": ["x"]}}, "duck", schemas=schemas)
 
 
 def test_post_filter_narrows_hits_not_scores(tiny):

@@ -12,7 +12,20 @@ from golang_db_query_engine_elasticsearch_indexer_spark.operators.esql import (
     ESQL_FILTER_STATS,
     ESQL_MEDIAN_RENAME,
     compile_esql,
+    esql_df,
 )
+from golang_db_query_engine_elasticsearch_indexer_spark.session import (
+    footer_schemas,
+)
+from tests.conftest import SF_DIR
+
+
+def _schemas():
+    """Fixture schemas for the multi-index FROM statements compiled
+    below."""
+    return footer_schemas(
+        ("region", "nation", "documents", "events"), SF_DIR
+    )
 
 
 @pytest.fixture()
@@ -33,7 +46,7 @@ def tiny():
 
 
 def _rows(con, q):
-    return con.execute(compile_esql(q, "duck")).fetchall()
+    return con.execute(compile_esql(q, "duck", _schemas())).fetchall()
 
 
 def test_where_eval_keep_sort_limit(tiny):
@@ -98,7 +111,7 @@ def test_esql_rejections(tiny):
          "DATE_FORMAT token"),
         ("FROM region, nope | LIMIT 1",
          "multi-index FROM knows only"),
-        ("FROM zz* | LIMIT 1", "matches no registered index"),
+        ("FROM zz* | LIMIT 1", "must be expanded before compile"),
         ("FROM t | WHERE SUM(v) > 1", "only inside STATS"),
         ("FROM t | STATS n = COUNT(*) BY v + 1",
          "BY wants plain column names"),
@@ -385,12 +398,29 @@ def test_multi_index_from_union(tiny):
     # missing columns NULL-pad per the ES rule
     assert rows == [("nation", None, "FRANCE"),
                     ("region", "AMERICA", None)]
-    # wildcard FROM expands against the registered fixture inventory
-    sql = compile_esql("FROM e* | LIMIT 1", "duck")
+
+
+def test_from_wildcards_resolve_against_session(spark, tables):
+    """esql_df expands FROM wildcards against the request session's
+    indices, then compiles the union over their catalog schemas."""
+    from golang_db_query_engine_elasticsearch_indexer_spark.errors import (
+        NotFoundError,
+    )
+    from golang_db_query_engine_elasticsearch_indexer_spark.operators.esql import (
+        _resolve_from,
+    )
+
+    q, schemas = _resolve_from(spark, "FROM e* | LIMIT 1")
+    assert q == "FROM embeddings, events | LIMIT 1"
+    sql = compile_esql(q, "spark", schemas)
     assert "UNION ALL" in sql and "NULL AS" in sql
     assert "events" in sql and "embeddings" in sql
     # duplicate mentions collapse; single-name wildcard skips the union
-    assert "UNION ALL" not in compile_esql("FROM r* | LIMIT 1", "duck")
+    q, schemas = _resolve_from(spark, "FROM r*, region | LIMIT 1")
+    assert (q, schemas) == ("FROM region | LIMIT 1", {})
+    assert "UNION ALL" not in compile_esql(q, "spark", schemas)
+    with pytest.raises(NotFoundError, match="no indices match"):
+        esql_df(spark, "FROM zz* | LIMIT 1")
 
 
 def test_union_uid_unique_per_row(tiny):
@@ -399,13 +429,14 @@ def test_union_uid_unique_per_row(tiny):
     repeats per order, so the r12 first-column _uid left pagination
     engine-arbitrary for exactly the rows it was added to pin. The
     fix hashes every cross-engine-stable column of the branch."""
-    from golang_db_query_engine_elasticsearch_indexer_spark import (
-        session,
-    )
+    from pyspark.sql import types as T
+
     from golang_db_query_engine_elasticsearch_indexer_spark.operators.esql import (
-        _TABLE_COLUMNS,
         union_all_sql,
     )
+
+    def schema(**cols):
+        return T.StructType([T.StructField(c, t) for c, t in cols.items()])
 
     tiny.execute(
         """CREATE TABLE li AS SELECT * FROM (VALUES
@@ -413,21 +444,18 @@ def test_union_uid_unique_per_row(tiny):
            ) AS x(ok, ln, fl)"""
     )
     tiny.execute("CREATE TABLE hdr AS SELECT 3 AS ok")
-    session.TABLE_UID_SAFE["li"] = ["ok", "ln", "fl"]
-    session.TABLE_UID_SAFE["hdr"] = ["ok"]
-    try:
-        sql = union_all_sql(
-            {"li": ["ok", "ln", "fl"], "hdr": ["ok"]}, uid=True
-        )
-        uids = [
-            r[0]
-            for r in tiny.execute(f"SELECT _uid FROM ({sql})").fetchall()
-        ]
-        # 4 rows, 4 distinct _uids — despite ok=1 repeating in li
-        assert len(uids) == 4 and len(set(uids)) == 4
-        assert all(u for u in uids)  # never NULL/empty
-    finally:
-        del session.TABLE_UID_SAFE["li"], session.TABLE_UID_SAFE["hdr"]
+    sql = union_all_sql({
+        "li": schema(ok=T.IntegerType(), ln=T.IntegerType(),
+                     fl=T.StringType()),
+        "hdr": schema(ok=T.IntegerType()),
+    }, uid=True)
+    uids = [
+        r[0]
+        for r in tiny.execute(f"SELECT _uid FROM ({sql})").fetchall()
+    ]
+    # 4 rows, 4 distinct _uids — despite ok=1 repeating in li
+    assert len(uids) == 4 and len(set(uids)) == 4
+    assert all(u for u in uids)  # never NULL/empty
     # r13 self-review pin: per-column tokens make the hash immune to
     # delimiter ambiguity — ('a|b','c') vs ('a','b|c') — and to a
     # literal value colliding with the NULL sentinel
@@ -436,20 +464,16 @@ def test_union_uid_unique_per_row(tiny):
              ('a|b', 'c'), ('a', 'b|c'), ('n', NULL), (NULL, 'n')
            ) AS x(s1, s2)"""
     )
-    session.TABLE_UID_SAFE["amb"] = ["s1", "s2"]
-    try:
-        sql2 = union_all_sql({"amb": ["s1", "s2"]}, uid=True)
-        uids2 = [
-            r[0]
-            for r in tiny.execute(f"SELECT _uid FROM ({sql2})").fetchall()
-        ]
-        assert len(uids2) == 4 and len(set(uids2)) == 4
-    finally:
-        del session.TABLE_UID_SAFE["amb"]
-    # the fixture-table compile hashes beyond the first column too
-    fix = union_all_sql(
-        {"lineitem": _TABLE_COLUMNS["lineitem"]}, uid=True
+    sql2 = union_all_sql(
+        {"amb": schema(s1=T.StringType(), s2=T.StringType())}, uid=True
     )
+    uids2 = [
+        r[0]
+        for r in tiny.execute(f"SELECT _uid FROM ({sql2})").fetchall()
+    ]
+    assert len(uids2) == 4 and len(set(uids2)) == 4
+    # the fixture-table compile hashes beyond the first column too
+    fix = union_all_sql(footer_schemas(("lineitem",), SF_DIR), uid=True)
     assert "md5(cast(l_orderkey" in fix
     assert "md5(cast(l_linenumber" in fix
 
@@ -580,7 +604,7 @@ def test_from_metadata_index(tiny):
     loud raise for unsupported metadata fields."""
     tiny.execute("CREATE TABLE r2 AS SELECT 1 AS r_regionkey,"
                  " 'A' AS r_name")
-    # note: _TABLE_COLUMNS resolves region/nation; reuse them
+    # _rows passes the fixture schemas of region/nation; reuse them
     tiny.execute("CREATE TABLE region AS SELECT 2 AS r_regionkey,"
                  " 'B' AS r_name")
     tiny.execute("CREATE TABLE nation AS SELECT 7 AS n_nationkey,"
@@ -1084,8 +1108,8 @@ def test_esql_r13_composition_fuzz(spark, tables, sf_dir):
                 ["FROM documents, events METADATA _index", *parts,
                  ending]
             )
-            df = spark.sql(compile_esql(q, "spark"))
-            ok, diag = compare(df, con, compile_esql(q, "duck"))
+            df = esql_df(spark, q)
+            ok, diag = compare(df, con, compile_esql(q, "duck", _schemas()))
             assert ok, f"{q}\n{diag}"
     finally:
         con.close()
@@ -1189,8 +1213,8 @@ def test_change_point_composition_cross_engine(spark, tables, sf_dir):
     con = duckdb_connection(sf_dir)
     try:
         for q in cases:
-            df = spark.sql(compile_esql(q, "spark"))
-            ok, diag = compare(df, con, compile_esql(q, "duck"))
+            df = esql_df(spark, q)
+            ok, diag = compare(df, con, compile_esql(q, "duck", _schemas()))
             assert ok, f"{q}\n{diag}"
         # negative: events rows have NULL n_chars, so the BY key has
         # a NULL band — the contract must raise in BOTH engines
@@ -1200,28 +1224,45 @@ def test_change_point_composition_cross_engine(spark, tables, sf_dir):
             " | CHANGE_POINT s ON band"
         )
         with pytest.raises(Exception, match="unique, non-NULL key"):
-            spark.sql(compile_esql(qbad, "spark")).collect()
+            esql_df(spark, qbad).collect()
         with pytest.raises(_duck.Error, match="unique, non-NULL key"):
-            con.execute(compile_esql(qbad, "duck")).fetchall()
+            con.execute(compile_esql(qbad, "duck", _schemas())).fetchall()
     finally:
         con.close()
 
 
-def test_table_columns_match_fixture_schemas():
-    """_TABLE_COLUMNS is the compile-time schema for multi-index
-    FROM's missing-column-as-NULL projection; if the fixture parquet
-    schema drifts, the union would silently project wrong columns —
-    pin it to the real files."""
+def test_footer_and_catalog_schemas_agree(spark):
+    """Oracles compile multi-index statements over the fixture footer
+    schemas (session.footer_schemas), the engine over its catalog's. For
+    every fixture table at both scale factors the two must agree on
+    column names, in order, and on the uid-safe columns — otherwise the
+    union would project different columns, or the two engines' _uid
+    would hash different ones."""
     import os
 
-    import pyarrow.parquet as pq
-
     from golang_db_query_engine_elasticsearch_indexer_spark.operators.esql import (
-        _TABLE_COLUMNS,
+        uid_safe_columns,
     )
-    from tests.conftest import SF_DIR
+    from golang_db_query_engine_elasticsearch_indexer_spark.session import (
+        FIXTURE_TABLES,
+        register_sf_dir,
+    )
+    from tests.conftest import SF_DIR_ORACLE
 
-    for t, cols in _TABLE_COLUMNS.items():
-        path = os.path.join(SF_DIR, f"{t}.parquet")
-        actual = [f.name for f in pq.read_schema(path)]
-        assert actual == cols, (t, actual, cols)
+    try:
+        for sf in (SF_DIR, SF_DIR_ORACLE):
+            tables = tuple(
+                t for t in FIXTURE_TABLES
+                if os.path.exists(os.path.join(sf, f"{t}.parquet"))
+            )
+            assert tables, sf
+            footers = footer_schemas(tables, sf)
+            register_sf_dir(spark, sf)
+            for t in tables:
+                catalog = spark.table(t).schema
+                assert footers[t].names == catalog.names, (sf, t)
+                assert uid_safe_columns(footers[t]) == uid_safe_columns(
+                    catalog
+                ), (sf, t)
+    finally:
+        register_sf_dir(spark, SF_DIR)

@@ -111,12 +111,15 @@ def test_union_branch_elimination_and_pushdown(spark, tables):
     the difference between scanning one index and scanning all of
     them. The r13 per-column-md5 _uid projection must not block
     either behavior (it is projection-level, above the filter)."""
-    from golang_db_query_engine_elasticsearch_indexer_spark import gateway
+    from golang_db_query_engine_elasticsearch_indexer_spark.operators.es_dsl import (
+        compile_union_search,
+    )
 
-    targets = gateway._expand_index_expression(
-        spark, "documents,events")
-    view = gateway._union_view(spark, targets)
-    df = spark.table(view).filter("n_chars >= 900")
+    schemas = {t: spark.table(t).schema for t in ("documents", "events")}
+    # the search path's form: the union as a CTE under a hit query whose
+    # size covers every match
+    body = {"query": {"range": {"n_chars": {"gte": 900}}}, "size": 10000}
+    df = spark.sql(compile_union_search(schemas, body, "spark"))
     plan = _executed_plan(df)
     assert plan.count("Scan parquet") == 1, plan[:1500]
     seg = plan[plan.index("PushedFilters"):][:200]

@@ -737,10 +737,8 @@ def test_union_uid_injective_on_distinct_rows(rows):
     self-review found the bare-concat form violated exactly this
     (('a|b','c') == ('a','b|c')); this property pins the class."""
     import duckdb
+    from pyspark.sql import types as T
 
-    from golang_db_query_engine_elasticsearch_indexer_spark import (
-        session,
-    )
     from golang_db_query_engine_elasticsearch_indexer_spark.operators.esql import (
         union_all_sql,
     )
@@ -748,13 +746,15 @@ def test_union_uid_injective_on_distinct_rows(rows):
     con = duckdb.connect()
     con.execute("CREATE TABLE pt (c1 VARCHAR, c2 VARCHAR)")
     con.executemany("INSERT INTO pt VALUES (?, ?)", rows)
-    session.TABLE_UID_SAFE["pt"] = ["c1", "c2"]
+    schema = T.StructType([
+        T.StructField("c1", T.StringType()),
+        T.StructField("c2", T.StringType()),
+    ])
     try:
-        sql = union_all_sql({"pt": ["c1", "c2"]}, uid=True)
+        sql = union_all_sql({"pt": schema}, uid=True)
         uids = [r[0] for r in con.execute(
             f"SELECT _uid FROM ({sql})").fetchall()]
         assert len(set(uids)) == len(rows)
         assert all(u for u in uids)
     finally:
-        del session.TABLE_UID_SAFE["pt"]
         con.close()

@@ -185,7 +185,7 @@ def test_nanosecond_timestamps_surface_as_timestamp_ntz(spark, tables, sf_dir, t
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from golang_db_query_engine_elasticsearch_indexer_spark import session
+    from golang_db_query_engine_elasticsearch_indexer_spark.operators.esql import uid_safe_columns
     from golang_db_query_engine_elasticsearch_indexer_spark.session import register_sf_dir
 
     when = [dt.datetime(1995, 3, 15, 0, 0), dt.datetime(2024, 2, 29, 23, 59, 58, 123456)]
@@ -197,7 +197,6 @@ def test_nanosecond_timestamps_surface_as_timestamp_ntz(spark, tables, sf_dir, t
             col: pa.array(when, pa.timestamp("ns")),
         }), tmp_path / f"{table}.parquet", version="2.6")
         assert pq.read_schema(tmp_path / f"{table}.parquet").field(col).type == pa.timestamp("ns")
-    saved = {k: dict(getattr(session, k)) for k in ("TABLE_COLUMNS", "TABLE_UID_SAFE")}
     assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
     try:
         register_sf_dir(spark, str(tmp_path))
@@ -207,11 +206,8 @@ def test_nanosecond_timestamps_surface_as_timestamp_ntz(spark, tables, sf_dir, t
             df = spark.table(table)
             assert df.schema[col].dataType.simpleString() == "timestamp_ntz", table
             assert [r[col] for r in df.orderBy(key).collect()] == when, table
-            assert col not in session.TABLE_UID_SAFE[table]
+            assert col not in uid_safe_columns(df.schema)
     finally:
-        for k, v in saved.items():
-            getattr(session, k).clear()
-            getattr(session, k).update(v)
         register_sf_dir(spark, sf_dir)
 
 

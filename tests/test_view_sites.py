@@ -35,8 +35,6 @@ _ALLOWED = {
         "views the caller names",
     ("session.py", "register_sf_dir", "dropTempView"):
         "drops temp views that shadow a source's tables",
-    ("gateway.py", "_union_view", "createOrReplaceTempView"):
-        "the __indices_<digest> union view of a multi-index request",
 }
 
 

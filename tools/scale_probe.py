@@ -228,9 +228,15 @@ def _esql_sql(name: str) -> str:
     from golang_db_query_engine_elasticsearch_indexer_spark.operators import (
         esql,
     )
+    from golang_db_query_engine_elasticsearch_indexer_spark.session import (
+        footer_schemas,
+    )
 
     q = _LOCAL_PROBES.get(name) or getattr(esql, name)
-    return esql.compile_esql(q, "spark")
+    # the scaled views keep the fixture columns, so the footers give the
+    # multi-index FROM's schemas
+    schemas = footer_schemas(("documents", "events"), SF_DIR)
+    return esql.compile_esql(q, "spark", schemas)
 
 
 def _esql_pipeline_sql() -> str:
