@@ -42,6 +42,17 @@ CHANGED: dict[str, int] = {
     "es_multi_index_search": 15,
     "esql_multi_index": 15,
     "esql_from_metadata": 15,
+    "stream_tumbling_counts": 15,
+    "stream_sliding_counts": 15,
+    "stream_session_counts": 15,
+    "stream_dedup_counts": 15,
+    "stream_dedup_within_watermark": 15,
+    "stream_stateful_user_summary": 15,
+    "stream_view_click_join": 15,
+    "stream_view_click_left_outer": 15,
+    "stream_static_enrich": 15,
+    "stream_docs_incremental_dedup": 15,
+    "stream_percolate_alerts": 15,
 }
 
 _ROOT = Path(__file__).resolve().parent.parent

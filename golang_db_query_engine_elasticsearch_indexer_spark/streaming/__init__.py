@@ -8,6 +8,10 @@ against the fixture parquet as a bounded stream (file source +
 ``processAllAvailable`` + memory sink) and returns the materialized
 result — REAL streaming execution, verified against batch SQL oracles.
 
+Each stream runs on its own child of the caller's session
+(``_stream_session``) at the stream's partition width; the caller's conf
+and catalog are never changed. Static reads stay on the caller's session.
+
 Scale posture: on a cluster the same code points at a Kafka/file-drop
 source; watermarks bound state, window aggs shuffle once per trigger on
 (window, key).
@@ -19,17 +23,18 @@ import os
 import shutil
 import tempfile
 import uuid
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
 from golang_db_query_engine_elasticsearch_indexer_spark.operators.materialized import bound
+from golang_db_query_engine_elasticsearch_indexer_spark.session import RUNTIME_CONF
 
 
 def _stream_state_partitions() -> int:
-    """Partition count for exchanges INSIDE a streaming query.
+    """Partition count for exchanges INSIDE a streaming query, set on
+    its ``_stream_session`` child only.
 
     A stateful stream bakes ``spark.sql.shuffle.partitions`` into its
     state layout at the first checkpoint and pays a fixed per-partition
@@ -43,35 +48,24 @@ def _stream_state_partitions() -> int:
     order is a fraction of the core count, not the batch shuffle width.
     Measured at sf0.1/local[32] (interleaved min-of-3): tumbling counts
     4.33 s at 32 state partitions -> 2.30 s at 8; foreachBatch dedup
-    3.93 -> 3.09. Parameterized for cluster deployments via
-    ``SPARK_GRAFT_STREAM_PARTITIONS`` (state sizing is a capacity
-    decision: pick rows-per-trigger / target-partition-rows); the local
-    default derives from the core-count env, never a constant tuned to
-    one box.
+    3.93 -> 3.09. The count derives from the core-count env, never a
+    constant tuned to one box.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    return int(
-        os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", max(4, cpus // 4))
-    )
+    return max(4, cpus // 4)
 
 
-@contextmanager
-def _scoped_stream_partitions(spark: SparkSession):
-    """Set the stream-sized shuffle partition count for the lifetime of
-    one bounded streaming query, restoring the session's batch value
-    after (the conf is read at query start and inside foreachBatch
-    bodies; scoping it keeps every batch entry's plan width untouched).
-    The swap is visible to anything else running on ``spark``, so
-    streams on one session must run serially, as the driver contract
-    runs them; API requests run on their own child sessions."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(_stream_state_partitions())
-    )
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+def _stream_session(spark: SparkSession) -> SparkSession:
+    """A new child of ``spark`` for one bounded stream, bound to
+    ``spark``'s current database, with ``RUNTIME_CONF`` (a child starts
+    from builder-time conf only) and the stream width. ``spark`` itself
+    is left as it is."""
+    child = spark.newSession()
+    for k, v in RUNTIME_CONF.items():
+        child.conf.set(k, v)
+    child.conf.set("spark.sql.shuffle.partitions", str(_stream_state_partitions()))
+    child.catalog.setCurrentDatabase(spark.catalog.currentDatabase())
+    return child
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -86,7 +80,9 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     (session.register_sf_dir). This keeps stream and batch readers
     agreeing with each other — and with the DuckDB oracle — whichever
     way the fixtures were written.
+    The stream runs on its own ``_stream_session`` child of ``spark``.
     """
+    spark = _stream_session(spark)
     path = os.path.join(sf_dir, "events.parquet")
     schema = spark.read.parquet(path).schema  # footer-only, no data scan
     raw = (
@@ -105,21 +101,27 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw
 
 
+def _drain(writer) -> None:
+    """Start a bounded stream's query and run it to completion."""
+    q = writer.start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+
 def _run_to_table(stream_df: DataFrame, output_mode: str) -> DataFrame:
-    """Drive a bounded stream to completion into a memory sink."""
+    """Drive a bounded stream to completion into a memory sink and
+    return its rows. The sink's name is dropped from the stream's
+    session catalog, so only the returned frame holds the rows."""
+    child = stream_df.sparkSession
     name = f"stream_out_{uuid.uuid4().hex[:8]}"
-    with _scoped_stream_partitions(stream_df.sparkSession):
-        q = (
-            stream_df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    return stream_df.sparkSession.table(name)
+    _drain(
+        stream_df.writeStream.outputMode(output_mode).format("memory").queryName(name)
+    )
+    out = child.table(name)
+    child._jsparkSession.sessionState().catalog().dropTempView(name)
+    return out
 
 
 def tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -326,43 +328,35 @@ ORDER BY user_id
 """
 
 
+def _view_click_stream(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """Each ``view`` event joined (``how``) to the ``click`` events by
+    the same user within the following 30 minutes. Both sides are
+    watermarked (1 hour) and the join carries the event-time range
+    condition, which is what lets Spark bound both join-state buffers."""
+    ev = _events_stream(spark, sf_dir)
+    views = ev.where(F.col("event_type") == "view").selectExpr(
+        "user_id AS v_user", "event_id AS view_id", "ts AS v_ts"
+    ).withWatermark("v_ts", "1 hour")
+    clicks = ev.where(F.col("event_type") == "click").selectExpr(
+        "user_id AS c_user", "event_id AS click_id", "ts AS c_ts"
+    ).withWatermark("c_ts", "1 hour")
+    return views.join(
+        clicks,
+        F.expr("v_user = c_user AND c_ts > v_ts AND c_ts <= v_ts + interval 30 minutes"),
+        how,
+    )
+
+
 def view_click_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream time-bounded join — Structured Streaming's hardest
-    shape: for each ``view`` event, the ``click`` events by the same
-    user within the following 30 minutes. Both sides are watermarked
-    (1 hour) and the join carries the event-time range condition, which
-    is what lets Spark bound both join-state buffers — without the time
-    bound, stream-stream join state grows forever.
+    shape (``_view_click_stream``); without the time bound,
+    stream-stream join state grows forever.
 
     The joined rows are post-aggregated (batch) to per-user pair
     counts so the bounded-stream result is compact and order-free; the
     oracle is the equivalent batch self-join.
     """
-    ev = _events_stream(spark, sf_dir)
-    views = (
-        ev.where(F.col("event_type") == "view")
-        .select(
-            F.col("user_id").alias("v_user"),
-            F.col("event_id").alias("view_id"),
-            F.col("ts").alias("v_ts"),
-        )
-        .withWatermark("v_ts", "1 hour")
-    )
-    clicks = (
-        ev.where(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "1 hour")
-    )
-    joined = views.join(
-        clicks,
-        F.expr(
-            "v_user = c_user AND c_ts > v_ts AND c_ts <= v_ts + interval 30 minutes"
-        ),
-    )
+    joined = _view_click_stream(spark, sf_dir, "inner")
     out = _run_to_table(joined.select("v_user", "view_id", "click_id"), "append")
     return (
         out.groupBy(F.col("v_user").alias("user_id"))
@@ -422,32 +416,7 @@ def view_click_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     abandoned-cart/unclicked-impression pipeline: both state buffers
     stay bounded by the same time bound that closes the join.
     """
-    ev = _events_stream(spark, sf_dir)
-    views = (
-        ev.where(F.col("event_type") == "view")
-        .select(
-            F.col("user_id").alias("v_user"),
-            F.col("event_id").alias("view_id"),
-            F.col("ts").alias("v_ts"),
-        )
-        .withWatermark("v_ts", "1 hour")
-    )
-    clicks = (
-        ev.where(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "1 hour")
-    )
-    joined = views.join(
-        clicks,
-        F.expr(
-            "v_user = c_user AND c_ts > v_ts AND c_ts <= v_ts + interval 30 minutes"
-        ),
-        "left_outer",
-    )
+    joined = _view_click_stream(spark, sf_dir, "left_outer")
     out = _run_to_table(
         joined.select("v_user", "view_id", "click_id", "v_ts"), "append"
     )
@@ -630,24 +599,21 @@ def docs_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(out_dir)
         )
 
-    with _scoped_stream_partitions(spark):
-        q = (
-            spark.readStream.format("parquet")
+    try:
+        _drain(
+            _stream_session(spark)
+            .readStream.format("parquet")
             .schema(schema)
             .option("pathGlobFilter", "documents.parquet")
             .load(sf_dir)
             .where(is_batch)
             .writeStream.outputMode("append")
             .foreachBatch(_match)
-            .start()
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            corpus_hashes.unpersist()
-            corpus_sh.unpersist()
-            corpus_postings.unpersist()
+    finally:
+        corpus_hashes.unpersist()
+        corpus_sh.unpersist()
+        corpus_postings.unpersist()
     # Freeze the matches (eager localCheckpoint — blocks are GC-scoped
     # to the returned frame) so the temp sink directory can be deleted
     # instead of accumulating across runs.
@@ -758,17 +724,11 @@ def stream_index_events(
         totals["failed"] += stats.num_failed
         totals["batches"] += 1
 
-    with _scoped_stream_partitions(spark):
-        q = (
-            _events_stream(spark, sf_dir)
-            .writeStream.outputMode("append")
-            .foreachBatch(_write_batch)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    _drain(
+        _events_stream(spark, sf_dir)
+        .writeStream.outputMode("append")
+        .foreachBatch(_write_batch)
+    )
     return totals
 
 
@@ -812,8 +772,11 @@ def hll_daily_merged(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("day", "bucket")
         .agg(F.max("m").alias("m"))
     )
-    with bound(spark, regs=_run_to_table(regs, "complete")) as v:
-        return spark.sql(
+    out = _run_to_table(regs, "complete")
+    # the view registers in the frame's own session, the stream's child
+    child = out.sparkSession
+    with bound(child, regs=out) as v:
+        return child.sql(
             f"WITH regs AS (SELECT day, bucket, m FROM {v['regs']}),{HLL_DAILY_POST}"
         )
 

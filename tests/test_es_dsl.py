@@ -565,6 +565,30 @@ def test_source_object_form(spark, tables, sf_dir, duck):
              "sort": [{"doc_id": "asc"}], "size": 3}
     assert spark.sql(
         compile_search("documents", body3, "spark")).columns == ["doc_id"]
+    # runtime fields join the schema the object form resolves against:
+    # the catalog's on the spark side, the footers' on the duck side
+    from golang_db_query_engine_elasticsearch_indexer_spark.session import (
+        footer_schemas,
+    )
+
+    footers = footer_schemas(("documents",), sf_dir)
+    for rt_body, want in [
+        ({"runtime_mappings": {"d": {"type": "long", "script": {
+            "source": "emit(doc['n_chars'].value * 2)"}}},
+          "_source": {"excludes": ["text"]}},
+         ["doc_id", "lang", "source", "n_chars", "d"]),
+        ({"script_fields": {"doc_half": {"script": {
+            "source": "doc['n_chars'].value / 2"}}},
+          "_source": {"includes": ["doc*"]}},
+         ["doc_id", "doc_half"]),
+    ]:
+        rt_body = {**rt_body, "sort": [{"doc_id": "asc"}], "size": 5}
+        df = spark.sql(compile_search("documents", rt_body, "spark", schemas=schemas))
+        assert df.columns == want
+        ok, diag = compare(
+            df, duck, compile_search("documents", rt_body, "duck", schemas=footers)
+        )
+        assert ok, diag
     import pytest as _pytest
     with _pytest.raises(ValueError, match="selected no fields"):
         compile_search("documents", {

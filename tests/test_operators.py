@@ -1724,6 +1724,18 @@ def test_bound_view_kernels_concurrent_on_one_session(spark, tables, sf_dir, duc
     _run_concurrently_on_one_session(spark, sf_dir, duck, _BOUND_VIEW_KERNELS)
 
 
+def test_stream_and_batch_kernel_concurrent_on_one_session(spark, tables, sf_dir, duck):
+    """A bounded stream and a batch kernel from two threads on one
+    session: the stream plans on its own child session, so the shared
+    session's shuffle width is the same afterwards."""
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    _run_concurrently_on_one_session(
+        spark, sf_dir, duck, ("stream_tumbling_counts", "sketch_histogram_quantiles")
+    )
+    assert spark.conf.get(key) == before
+
+
 # measured at sf0.001 on the test session: 14 and 11 jobs (33 and 25
 # when each ran a chain of persisted views); the bound is the count + 2,
 # since AQE can move a count by one or two

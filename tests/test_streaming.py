@@ -197,6 +197,56 @@ def test_stream_index_events_into_bulk_sink(spark, tables, sf_dir):
         stub.stop()
 
 
+def test_stream_leaves_caller_conf_alone(spark, tables, sf_dir):
+    """A stream runs on its own child session: a sink that reads the
+    caller's shuffle width mid-stream sees the caller's value, not the
+    stream's, and the value is the same after the call."""
+    from golang_db_query_engine_elasticsearch_indexer_spark.indexer import IndexStats
+    from golang_db_query_engine_elasticsearch_indexer_spark.streaming import (
+        _stream_state_partitions,
+        stream_index_events,
+    )
+
+    key = "spark.sql.shuffle.partitions"
+    seen = []
+
+    class _ConfProbeSink:
+        def write(self, session, df, index_name):
+            seen.append(spark.conf.get(key))
+            return IndexStats(index_name, num_docs=df.count())
+
+    old = spark.conf.get(key)
+    caller = str(_stream_state_partitions() + 1)
+    spark.conf.set(key, caller)
+    try:
+        totals = stream_index_events(spark, sf_dir, _ConfProbeSink())
+        assert totals["docs"] == spark.table("events").count()
+        assert seen and set(seen) == {caller}
+        assert spark.conf.get(key) == caller
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_streams_leave_no_sink_tables(spark, tables, sf_dir, duck):
+    """Memory-sink outputs leave no table behind: each entry equals its
+    oracle, and the caller's table list is unchanged afterwards."""
+    from golang_db_query_engine_elasticsearch_indexer_spark import streaming
+    from golang_db_query_engine_elasticsearch_indexer_spark.oracle import compare
+
+    def listed():
+        return sorted((t.name, t.isTemporary) for t in spark.catalog.listTables())
+
+    reg = streaming.registry()
+    before = listed()
+    for name in ("stream_tumbling_counts", "stream_hll_daily_merged",
+                 "stream_static_enrich"):
+        ok, diag = compare(reg[name]["fn"](spark, sf_dir), duck, reg[name]["oracle"])
+        assert ok, f"{name}: {diag}"
+    after = listed()
+    assert after == before
+    assert not any(n.startswith("stream_out_") for n, _ in after)
+
+
 def _write_typed_batch(spark, path, rows):
     import datetime as dt
 

@@ -35,6 +35,8 @@ _ALLOWED = {
         "views the caller names",
     ("session.py", "register_sf_dir", "dropTempView"):
         "drops temp views that shadow a source's tables",
+    ("streaming/__init__.py", "_run_to_table", "dropTempView"):
+        "drops the memory-sink name from the stream's child catalog only",
 }
 
 
